@@ -24,8 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-K1 = 1.2
-B = 0.75
+from intuition_spark.query.wand import B, K1
 
 # the tiny stopword subset used by gate quality metrics (kept inline so the
 # SQL literal below is character-identical)

@@ -49,10 +49,9 @@ from pyspark.sql import types as T
 
 from intuition_spark.analysis.analyzers import analyze_flat, analyze_text
 from intuition_spark.index import codec, snapshots
+from intuition_spark.query.wand import B, K1
 
 SEG_SHIFT = 40  # doc_id = (seg << 40) | row_in_segment
-K1 = 1.2
-B = 0.75
 # Docs per indexer compute chunk. The object-array tokenize/factorize/lexsort
 # stage is cache-bound: ~6k-doc chunks measured ~7,000 docs/s/core FLAT from
 # 1 to 8 concurrent pinned workers on the bench box, vs ~2,100-3,000 and

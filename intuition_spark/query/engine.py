@@ -1,29 +1,29 @@
-"""Query executor: AST → DataFrame plan → top-k hits.
+"""Query executor: AST → segment-kernel plan → top-k hits.
 
 Replaces the reference's query path (buildSearchExpression →
 `SolrClientTool.find` → HTTP → Solr edismax → Lucene BM25,
 `service/SolrServiceImpl.java:416-480` / `util/SolrClientTool.java:162-214`).
 
-Two physical strategies, both reading the same block-compressed segmented
-postings (index/builder.py):
+Every query shape is scored by ONE per-segment kernel (query/wand.py) over
+the block-compressed segmented postings (index/builder.py), in one of two
+placements:
 
-* ``wand``        — per-segment block-max top-k (query/wand.py). Postings are
-  doc-partitioned by segment, so the only query-time shuffle is the tiny
-  (scanned blocks of the query's terms) → groupBy(seg); the global top-k is a
-  merge of per-segment top-ks. This is the 100 TB hot path.
-* ``exhaustive``  — decode blocks to posting rows, score with pure DataFrame
-  expressions (join broadcast idf table → groupBy(doc) → HAVING all groups →
-  TakeOrderedAndProject). Correctness anchor + the path that supports
-  non-scoring ``fq`` candidate filters, phrase/proximity positions, tf-sort.
+* driver      — cached pushdown block fetch (`_collect_blocks`) → kernel per
+  segment in-process → local hydration. Taken by ``mode="auto"`` when the
+  query's postings, fq ids and tombstones are all bounded.
+* distributed — ``groupBy("seg")[.cogroup(ids)].applyInPandas(kernel)`` →
+  hydration join → TakeOrderedAndProject. Postings are doc-partitioned by
+  segment, so the only query-time shuffle is the query's scanned blocks; the
+  global top-k is a merge of per-segment top-ks.
 
-Both must return identical top-k (tested). Tiebreak: score desc, conv_id asc,
-turn_idx asc.
+``mode="wand"`` forces the distributed placement; ``mode="exhaustive"`` forces
+it with pruning off (the kernel scores every doc range). All must return
+identical top-k (tested). Tiebreak: score desc, conv_id asc, turn_idx asc.
 """
 
 from __future__ import annotations
 
 import json
-import math
 import os
 from dataclasses import dataclass
 
@@ -34,19 +34,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from intuition_spark.analysis.analyzers import analyze_text
-from intuition_spark.index import codec
-from intuition_spark.index.builder import SEG_SHIFT, IndexPaths, decode_blocks_df
+from intuition_spark.index.builder import SEG_SHIFT, IndexPaths
 from intuition_spark.query import wand
 from intuition_spark.query.ast import Query
-
-K1 = 1.2
-B = 0.75
-
-from intuition_spark.query.ast import SLOPPY_WEIGHTED  # noqa: E402 (shared semantics)
-
-
-def bm25_idf(N: int, df: int) -> float:
-    return math.log(1.0 + (N - df + 0.5) / (df + 0.5))
+from intuition_spark.query.wand import bm25_idf
 
 
 @dataclass
@@ -64,12 +55,13 @@ class SearchEngine:
     dual ``text`` / ``text_ws`` fields (`model/SolrItem.java:32-33`).
 
     Serving fast path: when a query's candidate postings are small
-    (Σ df ≤ SMALL_QUERY_POSTINGS) and carry no fq filters, ``mode="auto"``
-    collects the pushdown-filtered blocks to the driver and runs the SAME
-    block-max WAND scorer in-process — two tiny Spark scan jobs instead of a
-    shuffle + applyInPandas + join pipeline. This is what a serving node does
-    with a Lucene segment reader; the distributed path remains for head terms
-    and is forced with ``mode="wand"``/``"exhaustive"`` (identity-tested).
+    (Σ df ≤ SMALL_QUERY_POSTINGS) and its fq ids and tombstones are bounded,
+    ``mode="auto"`` collects the pushdown-filtered blocks to the driver and
+    runs the segment kernel in-process — at most two tiny Spark scan jobs
+    instead of a shuffle + applyInPandas + join pipeline. This is what a
+    serving node does with a Lucene segment reader; the distributed placement
+    remains for head terms and is forced with ``mode="wand"``/``"exhaustive"``
+    (identity-tested).
     """
 
     # dictionaries up to this many terms are cached driver-side: one parquet
@@ -94,20 +86,20 @@ class SearchEngine:
     # distributed plans re-execute on collect (cache still skips planning).
     RESULT_CACHE_MAX = int(os.environ.get("INTUITION_RESULT_CACHE_MAX", "256"))
     # LRU fq cache (Solr filterCache analogue): each non-scoring metadata
-    # predicate (field_eq entry; require_no_tool) resolves ONCE to a sorted
-    # doc_id array, then is intersected into every scorer BEFORE the top-k
-    # cut — Solr fq semantics (filter, then rank). Like Solr's per-shard
-    # bitsets the arrays are bounded: a predicate matching more than
-    # FQ_MAX_IDS docs is marked oversize and its queries take the
-    # distributed exhaustive path (filter pushed into the docs join) instead.
+    # predicate (field_eq entry; require_no_tool; ts_after; filter_docs)
+    # resolves ONCE to a sorted doc_id array, then is intersected into the
+    # kernel BEFORE the top-k cut — Solr fq semantics (filter, then rank).
+    # Like Solr's per-shard bitsets the arrays are bounded: a predicate
+    # matching more than FQ_MAX_IDS docs is marked oversize and its queries
+    # take the distributed placement, its ids cogrouped per segment instead.
     FQ_CACHE_MAX = int(os.environ.get("INTUITION_FQ_CACHE_MAX", "64"))
     FQ_MAX_IDS = int(os.environ.get("INTUITION_FQ_MAX_IDS", "2000000"))
     # tombstone sets up to this size collect to the driver (one sorted array
-    # intersected into every scorer — the Lucene liveDocs-bitset analogue);
-    # past it they stay DISTRIBUTED: exhaustive paths anti-join the tombstone
-    # parquet, WAND paths receive per-segment tombstone partitions through
-    # the cogrouped scorer. A tenant deleting 10% of a 10^12-turn index
-    # between compactions can no longer break the driver (r4 verdict #4).
+    # intersected into the kernel — the Lucene liveDocs-bitset analogue);
+    # past it they stay DISTRIBUTED: the kernel receives per-segment
+    # tombstone partitions through the cogroup. A tenant deleting 10% of a
+    # 10^12-turn index between compactions can no longer break the driver
+    # (r4 verdict #4).
     TOMB_MAX_IDS = int(os.environ.get("INTUITION_TOMB_MAX_IDS", "2000000"))
 
     def __init__(
@@ -156,8 +148,11 @@ class SearchEngine:
         # the same thread. Interleaved/concurrent searches on one engine, or
         # reading after a later search, report the most recent plan's path
         # (matching Solr, whose debug output is per-request; a per-request
-        # engine handle is the concurrency story, ADVICE r4).
+        # engine handle is the concurrency story, ADVICE r4). The path is one
+        # of result_cache / driver / distributed / empty; ``last_kernel`` is
+        # the (score mode, prune) the kernel ran with, None when none ran.
         self.last_path: str | None = None
+        self.last_kernel: tuple[str, bool] | None = None
         self._load_stats()
         self._needs_warm: set[str] = set(self.paths)
         for a in self.paths:  # eager warm-up: first real query pays no cold start
@@ -340,7 +335,7 @@ class SearchEngine:
         """Sorted doc_ids deleted by incremental upserts (empty if none), or
         ``None`` when the set exceeds TOMB_MAX_IDS — past that bound nothing
         collects to the driver and callers must use the distributed form
-        (``_tomb_df`` anti-joins; per-segment cogroup partitions for WAND).
+        (``_tomb_df``, cogrouped per segment with the posting blocks).
         Cached per (analyzer, dir mtime); compaction usually bounds the set
         well under the threshold."""
         import os as _os
@@ -377,22 +372,31 @@ class SearchEngine:
         tomb = self._tombstones(a)
         return tomb.size > 0 if tomb is not None else True
 
-    def _tombstones_strict(self, a: str) -> np.ndarray:
-        """Tombstone array for driver-side scorers, which can only run when
-        the set is bounded — routing must have gone distributed otherwise."""
-        tomb = self._tombstones(a)
-        if tomb is None:
-            raise RuntimeError(
-                "driver-side scorer reached with an oversize tombstone set "
-                f"(> TOMB_MAX_IDS={self.TOMB_MAX_IDS}); routing bug"
-            )
-        return tomb
+    @staticmethod
+    def _fq_preds(q: Query) -> list[tuple[str, object]]:
+        """The query's non-scoring fq predicates as (column, value) pairs:
+        field_eq entries, require_no_tool (tool IS NULL), the ts_after range
+        bound (the reference's date:[x TO NOW]) and the filter_docs doc list.
+        Solr's filterCache caches range and list fqs exactly like equality."""
+        preds: list[tuple[str, object]] = sorted((q.field_eq or {}).items())
+        if q.require_no_tool:
+            preds.append(("tool", None))
+        if q.ts_after is not None:
+            preds.append(("__ts_after__", q.ts_after))
+        if q.filter_docs is not None:
+            preds.append(("__doc_in__", tuple(sorted(set(q.filter_docs)))))
+        return preds
 
-    def _field_cond(self, a: str, fcol: str, fval):
-        """Spark predicate for one field_eq entry, schema-driven: equality on
-        scalar columns, array_contains on array columns (the reference's
-        multi-valued `authors:"…"` contains-match, SolrServiceImpl.java:
-        397-404). fval=None means IS NULL (the require_no_tool shape)."""
+    def _fq_cond(self, a: str, fcol: str, fval):
+        """Spark predicate for one fq pair. field_eq is schema-driven:
+        equality on scalar columns, array_contains on array columns (the
+        reference's multi-valued `authors:"…"` contains-match,
+        SolrServiceImpl.java:397-404). fval=None means IS NULL (the
+        require_no_tool shape)."""
+        if fcol == "__ts_after__":
+            return F.col("ts") >= F.lit(fval)
+        if fcol == "__doc_in__":
+            return F.col("doc").isin(list(fval))
         dt = self._docs(a).schema[fcol].dataType
         if isinstance(dt, T.ArrayType):
             return F.array_contains(F.col(fcol), fval)
@@ -442,37 +446,21 @@ class SearchEngine:
                     atoms.append(_Atom(gid, toks, q.slop, atom))
         return atoms
 
-    def _finalize(
-        self, scored: DataFrame, q: Query, a: str, order=("score",),
-        skip_tomb: bool = False,
-    ) -> DataFrame:
-        """fq-style predicates + hydration join + canonical top-k order.
+    def _finalize(self, scored: DataFrame, q: Query, a: str, order=("score",)) -> DataFrame:
+        """Hydration join + canonical top-k order of the distributed
+        placement: every ``order`` key descending (score; tf-sort's ts is the
+        reference's ``date desc``), then conv_id, turn_idx ascending. fq ids
+        and tombstones were already applied inside the kernel.
 
         Mirrors lifecycle step 4 of `/query2` (hydrate by id then order,
-        `controller/ArticleController.java:465-473`). ``skip_tomb`` elides
-        the tombstone anti-join when the scorer already applied exclusions
-        per segment (the distributed cogroup path) — above TOMB_MAX_IDS the
-        anti-join is a real shuffle, not a broadcast, so redundancy there
-        has a cost the small case doesn't.
+        `controller/ArticleController.java:465-473`).
         """
-        sel = ["doc_id", "doc", "conv_id", "turn_idx", "ts", "role", "tool"]
-        extra = [c for c in (q.field_eq or {}) if c not in sel]
-        docs = self._docs(a).select(*sel, *extra)
-        if not skip_tomb:
-            scored = self._anti_join_tombstones(scored, a)
-        if q.filter_docs is not None:
-            flt = self.spark.createDataFrame([(d,) for d in q.filter_docs], ["doc"])
-            docs = docs.join(F.broadcast(flt), "doc", "left_semi")
-        if q.ts_after is not None:
-            docs = docs.filter(F.col("ts") >= F.lit(q.ts_after))
-        if q.require_no_tool:
-            docs = docs.filter(F.col("tool").isNull())
-        for fcol, fval in (q.field_eq or {}).items():
-            docs = docs.filter(self._field_cond(a, fcol, fval))
-        out = scored.join(docs, "doc_id", "inner")
-        keys = [F.col(c).desc() if c in ("score", "tf") else F.col(c) for c in order]
-        out = out.orderBy(*keys, F.col("conv_id").asc(), F.col("turn_idx").asc()).select(
-            "doc", "score", "conv_id", "turn_idx"
+        docs = self._docs(a).select("doc_id", "doc", "conv_id", "turn_idx", "ts")
+        keys = [F.col(c).desc() for c in order]
+        out = (
+            scored.join(docs, "doc_id", "inner")
+            .orderBy(*keys, F.col("conv_id").asc(), F.col("turn_idx").asc())
+            .select("doc", "score", "conv_id", "turn_idx")
         )
         # deep paging (S7): rows offset..offset+k-1 of the canonical order —
         # Catalyst plans sort+offset+limit as one TakeOrdered(offset+k) with
@@ -507,9 +495,8 @@ class SearchEngine:
         )
 
     def _fq_ids(self, a: str, q: Query) -> np.ndarray | None:
-        """Solr filterCache analogue: resolve the query's metadata predicates
-        (field_eq entries + require_no_tool + the ts_after range bound) to
-        ONE sorted doc_id array.
+        """Solr filterCache analogue: resolve the query's fq predicates
+        (`_fq_preds`) to ONE sorted doc_id array (None when it has none).
 
         Each single predicate is cached (LRU, keyed with the on-disk index
         state so incremental merges invalidate naturally); conjunctions
@@ -518,26 +505,18 @@ class SearchEngine:
         the docs store. Returns None when any predicate matches more than
         FQ_MAX_IDS docs — the per-shard bound that keeps the driver's memory
         O(selective predicates), exactly Solr's maxDoc-bounded filterCache
-        bitsets; the caller must then use the distributed filtered path.
+        bitsets; the caller must then use the distributed placement.
         """
-        preds: list[tuple[str, object]] = sorted((q.field_eq or {}).items())
-        if q.require_no_tool:
-            preds.append(("tool", None))  # tool IS NULL
-        if q.ts_after is not None:
-            # range fq (the reference's date:[x TO NOW], SolrClientTool
-            # date-floor shape) caches exactly like an equality predicate —
-            # Solr's filterCache does the same for range fqs
-            preds.append(("__ts_after__", q.ts_after))
         out: np.ndarray | None = None
         state = self._index_state(a)
-        for fcol, fval in preds:
+        for fcol, fval in self._fq_preds(q):
             key = (a, fcol, fval, state)
             if key not in self._fq_cache:
                 cached_docs = self._doc_cache.get(a)
                 # extra metadata columns (register_field_col) aren't in the
                 # doc cache's fixed column set — resolve those distributed
                 if cached_docs is not None and (
-                    fcol == "__ts_after__" or fcol in cached_docs.columns
+                    fcol.startswith("__") or fcol in cached_docs.columns
                 ):
                     if fcol == "__ts_after__":
                         # toPandas yields NAIVE wall times in the SESSION
@@ -554,6 +533,8 @@ class SearchEngine:
                         elif bound.tzinfo is None:
                             bound = bound.tz_localize(sess_tz)
                         mask = cached_docs["ts"] >= bound
+                    elif fcol == "__doc_in__":
+                        mask = cached_docs["doc"].isin(fval)
                     else:
                         col = cached_docs[fcol]
                         mask = col.isna() if fval is None else (col == fval)
@@ -562,12 +543,8 @@ class SearchEngine:
                         ids.astype(np.int64)
                     )
                 else:
-                    if fcol == "__ts_after__":
-                        cond = F.col("ts") >= F.lit(fval)
-                    else:
-                        cond = self._field_cond(a, fcol, fval)
                     pdf = (
-                        self._docs(a).filter(cond).select("doc_id")
+                        self._docs(a).filter(self._fq_cond(a, fcol, fval)).select("doc_id")
                         .limit(self.FQ_MAX_IDS + 1).toPandas()
                     )
                     ids = None if len(pdf) > self.FQ_MAX_IDS else np.sort(
@@ -589,9 +566,8 @@ class SearchEngine:
 
     def search(self, q: Query, mode: str = "auto") -> DataFrame:
         if q.fields:
-            # even the single-field boost-1.0 shape (which routes through the
-            # plain path, not _search_multifield/_validate_fields) must not
-            # let a mistyped field name silently fall back to the first index
+            # a mistyped field name must not silently fall back to the
+            # first index
             for f in q.fields:
                 if f not in self.paths:
                     raise ValueError(
@@ -607,7 +583,7 @@ class SearchEngine:
         for f in sorted(q.fields) if q.fields else (a,):
             state += self._index_state(f)
         rkey = self._result_key(q, mode, a) + state
-        self.last_path = None
+        self.last_path = self.last_kernel = None
         hit = self._result_cache.get(rkey)
         if hit is not None:
             self._result_cache.move_to_end(rkey)
@@ -619,121 +595,185 @@ class SearchEngine:
             self._result_cache.popitem(last=False)
         return out
 
-    def _fq_fold(self, a: str, q: Query) -> tuple[bool, np.ndarray | None, bool, bool]:
+    def _fq_fold(self, a: str, q: Query) -> tuple[bool, np.ndarray | None]:
         """Fold the query's fq predicates through the filterCache — the ONE
         routing-state derivation shared by `_search_uncached` and the explain
         surface (ADVICE r4: a private re-implementation in explain.py could
         silently drift from the router's admission rule).
 
-        Returns ``(fast_ok, included, dist_filter, fq_preds)``: ``included``
-        is the bounded sorted id array the scorers intersect BEFORE any top-k
-        cut (None when there are no cacheable predicates, when filter_docs
-        forces the distributed path, or when a predicate is oversize);
-        ``fast_ok`` is the fq half of driver/WAND admission."""
-        dist_filter = q.filter_docs is not None
-        fq_preds = bool(q.field_eq) or q.require_no_tool or q.ts_after is not None
-        included: np.ndarray | None = None
-        fq_ok = False
-        if fq_preds and not dist_filter:
-            included = self._fq_ids(a, q)
-            fq_ok = included is not None  # None = predicate oversize
-        fast_ok = not (dist_filter or fq_preds) or fq_ok
-        return fast_ok, included, dist_filter, fq_preds
+        Returns ``(has_fq, included)``: ``included`` is the bounded sorted id
+        array the kernel intersects BEFORE any top-k cut, None when there are
+        no predicates or one is oversize (``has_fq`` tells which)."""
+        has_fq = bool(self._fq_preds(q))
+        return has_fq, self._fq_ids(a, q) if has_fq else None
 
     def _fq_pred_df(self, a: str, q: Query) -> DataFrame:
-        """The query's cacheable fq predicates resolved DISTRIBUTED: one
+        """The query's fq predicates resolved DISTRIBUTED: one
         pushdown-filtered scan of the docs store → (seg, doc_id). This is how
         an oversize predicate (> FQ_MAX_IDS matches — e.g. `role:assistant`
-        over 10^12 turns) reaches the WAND scorer without abandoning pruning:
+        over 10^12 turns) reaches the kernel without abandoning pruning:
         the ids stay partitioned, cogrouped with the posting blocks on seg
         (reference semantics: fq is cached AND ranked under,
         `SolrClientTool.java:273,317`)."""
         docs = self._docs(a)
-        for fcol, fval in (q.field_eq or {}).items():
-            docs = docs.filter(self._field_cond(a, fcol, fval))
-        if q.require_no_tool:
-            docs = docs.filter(F.col("tool").isNull())
-        if q.ts_after is not None:
-            docs = docs.filter(F.col("ts") >= F.lit(q.ts_after))
+        for fcol, fval in self._fq_preds(q):
+            docs = docs.filter(self._fq_cond(a, fcol, fval))
         return docs.select("seg", "doc_id")
 
     def _search_uncached(self, q: Query, a: str, mode: str) -> DataFrame:
-        # fq predicates split two ways (Solr semantics: ALL filter before
-        # ranking). field_eq / require_no_tool / ts_after resolve through
-        # the filterCache into an `included` id array the scorers intersect
-        # BEFORE any top-k cut — fast-path- and WAND-compatible. filter_docs
-        # (the arbitrary doc-list shape) stays distributed-only: it routes
-        # to the exhaustive path, where the predicate lands in the docs
-        # join before the global ordering.
-        fast_ok, included, dist_filter, fq_preds = self._fq_fold(a, q)
-        has_filter = dist_filter or fq_preds
-        fq_ok = included is not None
-        if fq_ok and included.size == 0:
-            self.last_path = "empty_fq"
+        """The one router: build the query's kernel spec, then run it in the
+        driver placement when ``mode="auto"`` admission passes (bounded
+        postings, fq ids and tombstones), else in the distributed placement.
+        fq ids and tombstones reach the kernel either as bounded sorted
+        arrays or, above FQ_MAX_IDS/TOMB_MAX_IDS, as per-segment id
+        partitions cogrouped with the blocks — either way they apply BEFORE
+        each segment's top-k (Solr fq semantics: filter, then rank). The mode
+        is an optimization hint and never changes result semantics."""
+        fields = dict(q.fields) if q.fields else {a: 1.0}
+        if q.fields:
+            self._validate_fields(q)
+        has_fq, included = self._fq_fold(a, q)
+        built = None
+        if included is None or included.size:
+            built = self._kernel_spec(q, fields, prune=mode != "exhaustive")
+        if built is None:
+            self.last_path = "empty"
             return self._empty_hits()
-        # driver fast paths additionally need the tombstone set driver-side
-        # (the scorers intersect it as a sorted array); an oversize set
-        # routes to the distributed paths, which exclude it per segment /
-        # via anti-join without ever materializing it on the driver
-        tomb_ok = self._tombstones(a) is not None
-        driver_ok = mode == "auto" and fast_ok and tomb_ok
-        if q.fields and (len(q.fields) > 1 or any(w != 1.0 for w in q.fields.values())):
-            # edismax qf: one query scored across several analyzed-field
-            # indexes (a single field at boost 1.0 falls through to the
-            # plain single-field routing on that index)
-            return self._search_multifield(q, a, mode, fast_ok, included)
-        ex_terms = self._exclude_terms(q, a)
-        if q.kind in ("wildcard", "regex", "fuzzy"):
-            return self._search_multiterm(
-                q, a, driver_ok=driver_ok, ex_terms=ex_terms,
-                included=included,
-            )
-        if q.kind == "tf_sort":
-            if driver_ok:
-                term = analyze_text(q.groups[0][0], self._analyzer_of(a))[0][0]
-                if self._small_enough(a, [term] + ex_terms):
-                    return self._driver_tf_sort(
-                        q, a, term, self._excluded_ids(a, ex_terms), included=included
-                    )
-            return self._search_tf_sort(q, a, ex_terms)
-        atoms = self._parse_atoms(q, a)
-        if not atoms:
-            self.last_path = "empty_no_atoms"
-            return self._empty_hits()
-        has_phrase = any(len(at.terms) > 1 for at in atoms)
-        if driver_ok:
-            terms = sorted({t for at in atoms for t in at.terms})
-            if self._small_enough(a, terms + ex_terms, positional=has_phrase):
-                excluded = self._excluded_ids(a, ex_terms)
-                if has_phrase:
-                    return self._driver_exhaustive(q, a, atoms, excluded, included=included)
-                return self._driver_wand(q, a, atoms, excluded, included=included)
-        # WAND applies MUST_NOT inside the scorer (before per-segment top-k),
-        # which needs the excluded ids driver-side — only safe when the
-        # excluded postings are small; a head-term exclusion routes to the
-        # exhaustive path's distributed anti-join instead. fq predicates
-        # reach the scorer either as bounded `included` ids (filterCache) or,
-        # when a predicate is oversize, as a DISTRIBUTED per-segment id frame
-        # cogrouped with the blocks — ranking stays under WAND pruning in
-        # both regimes (r4 verdict #1). Only the arbitrary-doc-list shape
-        # (filter_docs) still forces the exhaustive path, even under an
-        # explicit mode="wand" — the mode is an optimization hint and never
-        # changes result semantics.
-        small_ex = not ex_terms or self._small_enough(a, ex_terms)
-        if mode in ("wand", "auto") and not has_phrase and small_ex and not dist_filter:
-            fq_df = self._fq_pred_df(a, q) if (fq_preds and not fq_ok) else None
-            if tomb_ok:
-                excluded, tomb_df = self._excluded_ids(a, ex_terms), None
-            else:
-                excluded = self._excluded_ids(a, ex_terms, include_tombstones=False)
-                tomb_df = self._tomb_df(a)
-            return self._search_wand(
-                q, a, atoms, prune=True, excluded=excluded, included=included,
-                fq_df=fq_df, tomb_df=tomb_df,
-            )
-        return self._search_exhaustive(q, a, atoms, ex_terms)
+        spec, fetch, positional = built
+        tombs = [self._tombstones(f) for f in fields]
+        tomb_ok = all(t is not None for t in tombs)
+        excluded = None
+        if tomb_ok:
+            excluded = tombs[0] if len(tombs) == 1 else np.unique(np.concatenate(tombs))
+        if (
+            mode == "auto" and tomb_ok and (included is not None or not has_fq)
+            and all(self._small_enough(f, fetch[f], positional[f]) for f in fields)
+        ):
+            return self._run_driver(q, spec, fetch, positional, included, excluded)
+        fq_df = self._fq_pred_df(a, q) if has_fq and included is None else None
+        tomb_dfs = [] if tomb_ok else [t for t in map(self._tomb_df, fields) if t is not None]
+        return self._run_distributed(
+            q, a, spec, fetch, positional, included, excluded, fq_df, tomb_dfs
+        )
 
-    # ---- driver fast path (serving latency) ----------------------------
+    def _kernel_spec(
+        self, q: Query, fields: dict[str, float], prune: bool
+    ) -> tuple[wand.KernelSpec, dict[str, list[str]], dict[str, bool]] | None:
+        """The query's kernel spec, plus per field the terms whose blocks the
+        kernel reads (scored ∪ MUST_NOT) and whether it needs positions.
+        None when no clause survives analysis/expansion (nothing can match)."""
+        terms: dict[tuple[str, str], tuple[int, float, float]] = {}
+        phrases: list[tuple] = []
+        gids: set[int] = set()
+        if q.kind in ("tf_sort", "wildcard", "regex", "fuzzy"):  # single-field kinds
+            (a,) = fields
+            avgdl = self.stats[a]["avgdl"]
+            if q.kind == "tf_sort":
+                mode = "tf"
+                words = [t for t, _ in analyze_text(q.groups[0][0], self._analyzer_of(a))][:1]
+            else:
+                # Q5/Q6/Q7: dictionary expansion → constant-score union
+                # (Lucene CONSTANT_SCORE multi-term rewrite, the Solr 8 default)
+                mode = "const"
+                words = self._expand_cached(a, q.groups[0][0], q.kind)
+                if words is None:
+                    words = self.expand_dictionary(a, q.groups[0][0], q.kind)
+            terms = {(a, t): (0, 1.0, avgdl) for t in words}
+            gids = {0} if words else set()
+        else:
+            mode = "bm25"
+            for f, w in fields.items():
+                self._ensure_warm(f)
+                N, avgdl = self.stats[f]["N"], self.stats[f]["avgdl"]
+                atoms = self._parse_atoms(q, f)
+                dfs = self._dfs_for_terms(f, sorted({t for at in atoms for t in at.terms}))
+                for at in atoms:
+                    gids.add(at.gid)
+                    if len(at.terms) == 1:
+                        # a term reused across atoms is scored once, under its
+                        # first gid (documented limitation)
+                        idf = bm25_idf(N, dfs.get(at.terms[0], 0))
+                        terms.setdefault((f, at.terms[0]), (at.gid, w * idf, avgdl))
+                    else:
+                        # per-token idf sum (NOT per distinct term): a repeated
+                        # term counts once per position, like Lucene
+                        # PhraseWeight and the oracle
+                        idf = sum(bm25_idf(N, dfs.get(t, 0)) for t in at.terms)
+                        phrases.append((f, tuple(at.terms), at.slop, at.gid, w * idf, avgdl))
+        if not gids:
+            return None
+        exclude = frozenset((f, t) for f in fields for t in self._exclude_terms(q, f))
+        fetch = {
+            f: sorted(
+                {t for g, t in terms if g == f} | {t for g, t in exclude if g == f}
+                | {t for p in phrases if p[0] == f for t in p[1]}
+            )
+            for f in fields
+        }
+        positional = {f: any(p[0] == f for p in phrases) for f in fields}
+        spec = wand.KernelSpec(
+            mode, terms, len(gids), q.k + q.offset, prune, tuple(phrases), exclude
+        )
+        return spec, fetch, positional
+
+    def _run_driver(
+        self, q: Query, spec: wand.KernelSpec, fetch: dict[str, list[str]],
+        positional: dict[str, bool], included: np.ndarray | None, excluded: np.ndarray,
+    ) -> DataFrame:
+        """Driver placement: cached block fetch → kernel per segment →
+        local hydration. Latency = postings point-scan + docs point-scan,
+        both skipped on cache hits."""
+        self.last_path, self.last_kernel = "driver", (spec.mode, spec.prune)
+        blocks = pd.concat(
+            [self._collect_blocks(f, ts, positional[f]).assign(fld=f) for f, ts in fetch.items()],
+            ignore_index=True,
+        )
+        docs, scores = wand.score_segments(blocks, spec, included, excluded)
+        cand = pd.DataFrame({"doc_id": docs, "score": scores}).sort_values(
+            "score", ascending=False, kind="mergesort"
+        )
+        # cross-segment ties survive: the cutoff keeps every candidate at the
+        # boundary score for the canonical tiebreak in hydration
+        if len(cand) > spec.k:
+            cand = cand[cand["score"] >= float(cand["score"].iloc[spec.k - 1])]
+        return self._driver_hydrate(cand, q, self._order(spec))
+
+    def _run_distributed(
+        self, q: Query, a: str, spec: wand.KernelSpec, fetch: dict[str, list[str]],
+        positional: dict[str, bool], included: np.ndarray | None,
+        excluded: np.ndarray | None, fq_df: DataFrame | None, tomb_dfs: list[DataFrame],
+    ) -> DataFrame:
+        """Distributed placement: the query's scanned blocks (a ``fld``
+        column rides along — analyzed terms may contain any byte, so the
+        field can't be smuggled into the term string) → groupBy(seg)
+        [cogrouped with the oversize fq/tombstone id partitions] → kernel →
+        `_finalize`. Multi-field is valid because segments align across the
+        field indexes (_validate_fields), so per-segment block-max bounds
+        stay true upper bounds of the summed cross-field score."""
+        self.last_path, self.last_kernel = "distributed", (spec.mode, spec.prune)
+        blocks: DataFrame | None = None
+        for f, ts in fetch.items():
+            cols = self._BLOCK_COLS + (["pos_bin"] if positional[f] else [])
+            bl = self._blocks(f, ts).select(*cols).withColumn("fld", F.lit(f))
+            blocks = bl if blocks is None else blocks.unionByName(bl, allowMissingColumns=True)
+        schema = "doc_id long, score double"
+        if fq_df is None and not tomb_dfs:
+            scorer = wand.segment_scorer(spec, included, excluded)
+            scored = blocks.groupBy("seg").applyInPandas(scorer, schema)
+        else:
+            scorer = wand.segment_scorer(
+                spec, included, excluded, cogroup=True, dist_fq=fq_df is not None
+            )
+            aux = self._aux_ids_df(fq_df, tomb_dfs)
+            scored = blocks.groupBy("seg").cogroup(aux.groupBy("seg")).applyInPandas(scorer, schema)
+        return self._finalize(scored, q, a, self._order(spec))
+
+    @staticmethod
+    def _order(spec: wand.KernelSpec) -> tuple[str, ...]:
+        # tf-sort: sort=termfreq(text,t) desc, date desc (SolrClientTool.java:147-151)
+        return ("score", "ts") if spec.mode == "tf" else ("score",)
+
+    # ---- driver placement helpers (serving latency) ---------------------
     def _empty_hits(self) -> DataFrame:
         return self.spark.createDataFrame(
             [], "doc string, score double, conv_id string, turn_idx int"
@@ -751,51 +791,9 @@ class SearchEngine:
             out.extend(toks)
         return sorted(set(out))
 
-    def _anti_join_tombstones(self, df: DataFrame, a: str) -> DataFrame:
-        """Tombstone exclusion on a distributed frame: broadcast the cached
-        array when bounded, anti-join the tombstone parquet when oversize."""
-        tomb = self._tombstones(a)
-        if tomb is None:
-            return df.join(self._tomb_df(a), "doc_id", "left_anti")
-        if tomb.size:
-            tdf = self.spark.createDataFrame([(int(t),) for t in tomb], ["doc_id"])
-            return df.join(F.broadcast(tdf), "doc_id", "left_anti")
-        return df
-
-    def _anti_join_excluded(self, df: DataFrame, a: str, ex_terms: list[str]) -> DataFrame:
-        """MUST_NOT as a distributed anti-join on the excluded terms' postings
-        — scales to head-term exclusions (nothing collects to the driver)."""
-        if not ex_terms:
-            return df
-        ex_docs = decode_blocks_df(self._blocks(a, ex_terms)).select("doc_id").distinct()
-        return df.join(ex_docs, "doc_id", "left_anti")
-
-    def _excluded_ids(
-        self, a: str, ex_terms: list[str], include_tombstones: bool = True
-    ) -> np.ndarray | None:
-        """Tombstones ∪ doc ids of the excluded terms, as one sorted array for
-        the scorers (the same mechanism incremental deletes use). Returns
-        ``None`` when the tombstone set is oversize (TOMB_MAX_IDS) — the
-        caller must route tombstone exclusion distributed and may re-call
-        with ``include_tombstones=False`` for the (small) term-only side."""
-        tomb = (
-            self._tombstones(a) if include_tombstones else np.empty(0, dtype=np.int64)
-        )
-        if tomb is None:
-            return None
-        if not ex_terms:
-            return tomb
-        pdf = self._collect_blocks(a, ex_terms)
-        if pdf.empty:
-            return tomb
-        ids = np.concatenate(
-            [codec.delta_decode(r.docs_bin, int(r.n)) for r in pdf.itertuples(index=False)]
-        ).astype(np.int64)
-        return np.unique(np.concatenate([tomb, ids]))
-
     def _small_enough(self, a: str, terms: list[str], positional: bool = False) -> bool:
         """Driver fast-path admission. Postings volume is bounded by Σdf; the
-        positional route (_driver_exhaustive with phrases) additionally pulls
+        positional route (a query with phrases) additionally pulls
         pos_bin whose size scales with Σtf = Σcf, so it gets its own (lower)
         bound — a term just under the df threshold with huge per-doc tf can't
         drag an unbounded position stream to the driver."""
@@ -878,187 +876,14 @@ class SearchEngine:
                 .toPandas()
             )
         m = cand.merge(docs, on="doc_id")
-        sort_cols, asc = [], []
-        for c in order:
-            sort_cols.append("ts" if c == "ts" else c)
-            asc.append(c not in ("score", "tf", "ts"))
         m = m.sort_values(
-            sort_cols + ["conv_id", "turn_idx"], ascending=asc + [True, True], kind="mergesort"
+            [*order, "conv_id", "turn_idx"],
+            ascending=[False] * len(order) + [True, True], kind="mergesort",
         ).iloc[q.offset : q.offset + q.k]
         out = m[["doc", "score", "conv_id", "turn_idx"]]
         return self.spark.createDataFrame(
             out, schema="doc string, score double, conv_id string, turn_idx int"
         )
-
-    def _driver_wand(
-        self, q: Query, a: str, atoms: list[_Atom], excluded: np.ndarray | None = None,
-        included: np.ndarray | None = None,
-    ) -> DataFrame:
-        """Small-query WAND on the driver: same scorer, same blocks, no
-        shuffle. Latency = postings point-scan + docs point-scan."""
-        self.last_path = "driver_wand"
-        meta, n_groups = self._term_meta(a, atoms)
-        avgdl = self.stats[a]["avgdl"]
-        pdf = self._collect_blocks(a, list(meta))
-        if pdf.empty:
-            return self._empty_hits()
-        if excluded is None:
-            excluded = self._tombstones_strict(a)
-        depth = q.k + q.offset  # paging: the boundary moves to offset+k
-        scorer = wand.make_segment_scorer(
-            meta, n_groups, depth, avgdl, prune=True, excluded=excluded,
-            included=included,
-        )
-        # One scoring call PER SEGMENT, not one global call: the scorer's
-        # k-boundary heap tie-breaks by doc_id, which equals the canonical
-        # (conv_id, turn_idx) order only WITHIN a segment (builder guarantee);
-        # a single global heap would drop boundary ties in seg-major order and
-        # return the wrong tied doc. Cross-segment ties survive because the
-        # cutoff below keeps every candidate at the boundary score.
-        outs = [scorer((seg,), g) for seg, g in pdf.groupby("seg", sort=False)]
-        cand = pd.concat(outs, ignore_index=True) if outs else pd.DataFrame()
-        if cand.empty:
-            return self._empty_hits()
-        cand = cand.sort_values("score", ascending=False, kind="mergesort")
-        if len(cand) > depth:  # keep score ties at the page boundary for tiebreak
-            cutoff = float(cand["score"].iloc[depth - 1])
-            cand = cand[cand["score"] >= cutoff]
-        return self._driver_hydrate(cand, q)
-
-    def _driver_tf_sort(
-        self, q: Query, a: str, term: str, excluded: np.ndarray | None = None,
-        included: np.ndarray | None = None,
-    ) -> DataFrame:
-        self.last_path = "driver_tf_sort"
-        pdf = self._collect_blocks(a, [term])
-        if pdf.empty:
-            return self._empty_hits()
-        docs_l, tfs_l = [], []
-        for row in pdf.itertuples(index=False):
-            docs_l.append(codec.delta_decode(row.docs_bin, int(row.n)))
-            tfs_l.append(codec.varint_decode(row.tfs_bin, int(row.n)))
-        docs = np.concatenate(docs_l).astype(np.int64)
-        tfs = np.concatenate(tfs_l).astype(np.int64)
-        if excluded is None:
-            excluded = self._tombstones_strict(a)
-        if excluded.size:
-            keep = ~wand.in_sorted(docs, excluded)
-            docs, tfs = docs[keep], tfs[keep]
-        if included is not None:  # fq intersection BEFORE the k cut
-            keep = wand.in_sorted(docs, included)
-            docs, tfs = docs[keep], tfs[keep]
-        if docs.size == 0:
-            return self._empty_hits()
-        order = np.argsort(-tfs, kind="stable")
-        depth = q.k + q.offset
-        if order.size > depth:  # keep tf ties at the boundary (ts tiebreak next)
-            cutoff = tfs[order[depth - 1]]
-            order = order[tfs[order] >= cutoff]
-        cand = pd.DataFrame(
-            {"doc_id": docs[order], "score": tfs[order].astype(np.float64)}
-        )
-        return self._driver_hydrate(cand, q, order=("score", "ts"))
-
-    def _driver_field_contrib(
-        self, a: str, atoms: list[_Atom], boost: float
-    ) -> tuple[list, list, list]:
-        """Per-(doc, gid) BM25 contributions of ONE analyzed field × boost —
-        the decode/scoring core shared by the single-field driver exhaustive
-        path and the multi-field (edismax qf) driver path. Returns parallel
-        lists of numpy arrays (doc_ids, gids, weighted contributions)."""
-        meta, _ = self._term_meta(a, atoms)
-        avgdl = self.stats[a]["avgdl"]
-        N = self.stats[a]["N"]
-        single = [at for at in atoms if len(at.terms) == 1]
-        phrases = [at for at in atoms if len(at.terms) > 1]
-        need_pos = bool(phrases)
-        all_terms = sorted({t for at in atoms for t in at.terms})
-        pdf = self._collect_blocks(a, all_terms, with_positions=need_pos)
-        doc_parts: list[np.ndarray] = []
-        gid_parts: list[np.ndarray] = []
-        w_parts: list[np.ndarray] = []
-        if pdf.empty:
-            return doc_parts, gid_parts, w_parts
-
-        single_terms = {at.terms[0]: at.gid for at in single}
-        for row in pdf.itertuples(index=False):
-            if row.term not in single_terms:
-                continue
-            n = int(row.n)
-            docs = codec.delta_decode(row.docs_bin, n)
-            tfs = codec.varint_decode(row.tfs_bin, n).astype(np.float64)
-            dls = codec.varint_decode(row.dls_bin, n).astype(np.float64)
-            idf = meta[row.term][1]
-            doc_parts.append(docs.astype(np.int64))
-            gid_parts.append(np.full(n, single_terms[row.term], dtype=np.int32))
-            w_parts.append(boost * idf * wand._weight(tfs, dls, avgdl))
-
-        for at in phrases:
-            dfs = self._dfs_for_terms(a, sorted(set(at.terms)))
-            # per-token sum (NOT per distinct term): a repeated term counts
-            # once per position, like Lucene PhraseWeight and the oracle
-            idf_sum = boost * sum(bm25_idf(N, dfs.get(t, 0)) for t in at.terms)
-            # per-segment positional intersection (positions are complete per seg)
-            for _, seg_pdf in pdf.groupby("seg", sort=False):
-                mf = _phrase_seg_match(seg_pdf, at.terms, at.slop)
-                if mf.empty:
-                    continue
-                tf = mf["tf"].to_numpy()
-                dl = mf["dl"].to_numpy()
-                w = idf_sum * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
-                doc_parts.append(mf["doc_id"].to_numpy())
-                gid_parts.append(np.full(len(mf), at.gid, dtype=np.int32))
-                w_parts.append(w)
-        return doc_parts, gid_parts, w_parts
-
-    def _driver_score_contribs(
-        self, q: Query, a: str, contribs: tuple[list, list, list], n_groups: int,
-        excluded: np.ndarray | None, included: np.ndarray | None,
-    ) -> DataFrame:
-        """Aggregate per-(doc, gid) contributions → mm=100% → canonical top
-        page. Tail shared by the single- and multi-field driver paths."""
-        doc_parts, gid_parts, w_parts = contribs
-        if not doc_parts:
-            return self._empty_hits()
-        frame = pd.DataFrame(
-            {
-                "doc_id": np.concatenate(doc_parts),
-                "gid": np.concatenate(gid_parts),
-                "contrib": np.concatenate(w_parts),
-            }
-        )
-        agg = frame.groupby("doc_id").agg(
-            score=("contrib", "sum"), ng=("gid", "nunique")
-        )
-        agg = agg[agg["ng"] == n_groups]
-        if excluded is None:
-            excluded = self._tombstones_strict(a)
-        if excluded.size:
-            agg = agg[~agg.index.isin(excluded)]
-        if included is not None:  # fq intersection BEFORE the k cut
-            agg = agg[agg.index.isin(included)]
-        if agg.empty:
-            return self._empty_hits()
-        cand = agg.reset_index()[["doc_id", "score"]].sort_values(
-            "score", ascending=False, kind="mergesort"
-        )
-        depth = q.k + q.offset
-        if len(cand) > depth:
-            cutoff = float(cand["score"].iloc[depth - 1])
-            cand = cand[cand["score"] >= cutoff]
-        return self._driver_hydrate(cand, q)
-
-    def _driver_exhaustive(
-        self, q: Query, a: str, atoms: list[_Atom], excluded: np.ndarray | None = None,
-        included: np.ndarray | None = None,
-    ) -> DataFrame:
-        """Small-query exhaustive scoring (incl. phrase/proximity positional
-        matching) on the driver — same block decode, same sloppy-phrase
-        semantics, two point-scan jobs total."""
-        self.last_path = "driver_exhaustive"
-        n_groups = len({at.gid for at in atoms})
-        contribs = self._driver_field_contrib(a, atoms, 1.0)
-        return self._driver_score_contribs(q, a, contribs, n_groups, excluded, included)
 
     def _expand_cached(self, a: str, pattern: str, kind: str, fuzzy_max: int = 1) -> list[str] | None:
         """Dictionary expansion against the driver-side cache (no Spark job);
@@ -1085,25 +910,9 @@ class SearchEngine:
             ]
         raise ValueError(kind)
 
-    def _term_meta(self, a: str, atoms: list[_Atom]) -> tuple[dict[str, tuple[int, float]], int]:
-        """term → (gid, idf). Phrase terms carry the phrase gid; a term used in
-        several groups keeps the first (query sets don't reuse terms across
-        groups; documented limitation)."""
-        all_terms = sorted({t for at in atoms for t in at.terms})
-        dfs = self._dfs_for_terms(a, all_terms)
-        N = self.stats[a]["N"]
-        meta: dict[str, tuple[int, float]] = {}
-        for at in atoms:
-            for t in at.terms:
-                if t not in meta:
-                    meta[t] = (at.gid, bm25_idf(N, dfs.get(t, 0)))
-        return meta, len({at.gid for at in atoms})
-
-    def _aux_ids_df(
-        self, fq_df: DataFrame | None, tomb_df: DataFrame | None
-    ) -> DataFrame:
+    def _aux_ids_df(self, fq_df: DataFrame | None, tomb_dfs: list[DataFrame]) -> DataFrame:
         """(seg, doc_id, kind) union of the distributed fq side (kind=1) and
-        the distributed tombstone side (kind=0) for the cogrouped scorer.
+        the distributed tombstone sides (kind=0) for the cogrouped kernel.
         fq rows come from the docs store with seg already a column; tombstone
         rows recover it from the id (doc_id = seg << SEG_SHIFT | row)."""
         parts: list[DataFrame] = []
@@ -1115,7 +924,7 @@ class SearchEngine:
                     F.lit(1).alias("kind"),
                 )
             )
-        if tomb_df is not None:
+        for tomb_df in tomb_dfs:
             parts.append(
                 tomb_df.select(
                     F.shiftright(F.col("doc_id"), SEG_SHIFT).cast("int").alias("seg"),
@@ -1128,131 +937,6 @@ class SearchEngine:
             aux = aux.unionByName(p)
         return aux
 
-    def _search_wand(
-        self, q: Query, a: str, atoms: list[_Atom], prune: bool,
-        excluded: np.ndarray | None = None, included: np.ndarray | None = None,
-        fq_df: DataFrame | None = None, tomb_df: DataFrame | None = None,
-    ) -> DataFrame:
-        """Distributed per-segment block-max WAND. ``included``/``excluded``
-        are the driver-side (bounded) id arrays; ``fq_df``/``tomb_df`` are
-        the DISTRIBUTED forms for predicates/tombstone sets above the
-        driver bounds — they cogroup with the posting blocks on seg, so the
-        filter still applies BEFORE each segment's top-k (Solr fq semantics:
-        filter, then rank) and pruning is kept exactly when it matters most
-        (r4 verdict #1: at 10^12 turns even `role:assistant` is oversize)."""
-        meta, n_groups = self._term_meta(a, atoms)
-        avgdl = self.stats[a]["avgdl"]
-        blocks = self._blocks(a, list(meta)).select(
-            "seg", "term", "blk", "n", "first_doc", "last_doc", "max_tf", "min_dl",
-            "docs_bin", "tfs_bin", "dls_bin",
-        )
-        out_schema = T.StructType(
-            [T.StructField("doc_id", T.LongType()), T.StructField("score", T.DoubleType())]
-        )
-        depth = q.k + q.offset
-        if fq_df is None and tomb_df is None:
-            self.last_path = "wand_distributed"
-            if excluded is None:
-                excluded = self._tombstones(a)  # routing guarantees not None
-            # `included` (filterCache fq ids) reaches the scorer so the filter
-            # applies BEFORE each segment's top-k — without it a filtered
-            # per-segment top-k would drop docs the predicate keeps but the
-            # unfiltered ranking cuts (Solr fq semantics: filter, then rank).
-            scorer = wand.make_segment_scorer(
-                meta, n_groups, depth, avgdl, prune=prune, excluded=excluded,
-                included=included,
-            )
-            local_topk = blocks.groupBy("seg").applyInPandas(scorer, out_schema)
-            return self._finalize(local_topk, q, a)
-        self.last_path = "wand_distfq" if fq_df is not None else "wand_disttomb"
-        aux = self._aux_ids_df(fq_df, tomb_df)
-        scorer = wand.make_cogroup_segment_scorer(
-            meta, n_groups, depth, avgdl, prune=prune, excluded=excluded,
-            included=included, dist_included=fq_df is not None,
-            dist_excluded=tomb_df is not None,
-        )
-        local_topk = (
-            blocks.groupBy("seg")
-            .cogroup(aux.groupBy("seg"))
-            .applyInPandas(scorer, out_schema)
-        )
-        # the scorer already applied the distributed tombstone partitions —
-        # skip _finalize's anti-join only when IT was the tombstone mechanism
-        return self._finalize(local_topk, q, a, skip_tomb=tomb_df is not None)
-
-    def _field_contrib_frames(
-        self, a: str, atoms: list[_Atom], boost: float
-    ) -> list[DataFrame]:
-        """Distributed per-(doc, gid) contribution frames of ONE analyzed
-        field × boost — shared by the single-field exhaustive plan and the
-        multi-field (edismax qf) exhaustive plan."""
-        meta, _ = self._term_meta(a, atoms)
-        avgdl = self.stats[a]["avgdl"]
-        N = self.stats[a]["N"]
-        single = [at for at in atoms if len(at.terms) == 1]
-        phrases = [at for at in atoms if len(at.terms) > 1]
-        parts: list[DataFrame] = []
-
-        if single:
-            terms = sorted({at.terms[0] for at in single})
-            rows = decode_blocks_df(self._blocks(a, terms), with_positions=False)
-            idf_df = self.spark.createDataFrame(
-                [(t, meta[t][0], boost * meta[t][1]) for t in terms],
-                "term string, gid int, idf double",
-            )
-            # broadcast the tiny per-query term table; score is a pure column expr
-            scored = rows.join(F.broadcast(idf_df), "term").select(
-                "doc_id",
-                "gid",
-                (
-                    F.col("idf")
-                    * F.col("tf")
-                    * F.lit(K1 + 1.0)
-                    / (F.col("tf") + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl)))
-                ).alias("contrib"),
-            )
-            parts.append(scored)
-
-        for at in phrases:
-            dfs = self._dfs_for_terms(a, sorted(set(at.terms)))
-            # per-token sum — repeated phrase terms count per position
-            idf_sum = boost * sum(bm25_idf(N, dfs.get(t, 0)) for t in at.terms)
-            parts.append(self._phrase_contrib(a, at, idf_sum, avgdl))
-        return parts
-
-    def _gmask_filter(self, contrib: DataFrame, gids: set[int]) -> DataFrame:
-        """mm=100% as a bitmask OR instead of countDistinct: one shuffle with
-        full map-side combine (countDistinct plans a two-phase distinct
-        aggregation). A query never has 64 AND-groups, so the mask fits a
-        long. The expected mask is built from the SURVIVING gid set, not
-        (1<<n)-1 — a group whose atoms all analyzed away (pure stopwords)
-        leaves a sparse gid set and must not doom every doc."""
-        full_mask = 0
-        for g in gids:
-            full_mask |= 1 << g
-        return (
-            contrib.groupBy("doc_id")
-            .agg(
-                F.sum("contrib").alias("score"),
-                F.bit_or(F.expr("shiftleft(CAST(1 AS BIGINT), gid)")).alias("gmask"),
-            )
-            .filter(F.col("gmask") == F.lit(full_mask))
-            .select("doc_id", "score")
-        )
-
-    def _search_exhaustive(
-        self, q: Query, a: str, atoms: list[_Atom], ex_terms: list[str] | None = None
-    ) -> DataFrame:
-        self.last_path = "exhaustive_distributed"
-        parts = self._field_contrib_frames(a, atoms, 1.0)
-        contrib = parts[0]
-        for p in parts[1:]:
-            contrib = contrib.unionByName(p)
-        scored = self._gmask_filter(contrib, {at.gid for at in atoms})
-        scored = self._anti_join_excluded(scored, a, ex_terms or [])
-        return self._finalize(scored, q, a)
-
-    # ---- multi-field scoring (edismax qf) --------------------------------
     def _validate_fields(self, q: Query) -> None:
         base = None
         for f in q.fields:
@@ -1273,286 +957,6 @@ class SearchEngine:
                     f"same corpus (equal N/n_segments/seg_offset); got {base} vs "
                     f"{sig} for {f!r}"
                 )
-
-    def _excluded_union(self, per: list, ex_by_f: dict[str, list[str]]) -> np.ndarray | None:
-        """Tombstones ∪ MUST_NOT doc ids across every scored field (a doc
-        deleted in any field's index, or containing an excluded term in any
-        field, is out — Lucene MUST_NOT over the whole boolean). ``None``
-        when any field's tombstone set is oversize — multi-field queries
-        then take the exhaustive path, whose tombstone handling is fully
-        distributed."""
-        arrs = [self._excluded_ids(f, ex_by_f[f]) for f, _, _ in per]
-        if any(x is None for x in arrs):
-            return None
-        arrs = [x for x in arrs if x.size]
-        if not arrs:
-            return np.empty(0, dtype=np.int64)
-        return np.unique(np.concatenate(arrs))
-
-    def _search_multifield(
-        self, q: Query, a0: str, mode: str, fast_ok: bool,
-        included: np.ndarray | None,
-    ) -> DataFrame:
-        """edismax qf executor: score q.groups across every index in
-        q.fields with per-field boosts. Soundness rests on the builder's
-        determinism: doc ids and segment assignment derive only from
-        (conv_id, turn_idx, n_segments) — never the analyzer — so indexes
-        built over the same corpus with equal n_segments share the doc-id
-        namespace and align segment-for-segment (_validate_fields enforces
-        it). Group semantics unchanged: mm=100% across the FIELD UNION (a
-        group matched in any field counts); each matching (field, term)
-        contributes boost_f·idf_f·bm25_tf_f. Reference shape: one boolean
-        over `attr_content` AND `text` (Test1.java:577-586) with edismax
-        qf boosts."""
-        self._validate_fields(q)
-        per: list[tuple[str, float, list[_Atom]]] = []
-        gids: set[int] = set()
-        for f, w in q.fields.items():
-            self._ensure_warm(f)
-            atoms = self._parse_atoms(q, f)
-            gids |= {at.gid for at in atoms}
-            per.append((f, float(w), atoms))
-        if not gids:
-            self.last_path = "empty_no_atoms"
-            return self._empty_hits()
-        n_groups = len(gids)
-        has_phrase = any(len(at.terms) > 1 for _, _, atoms in per for at in atoms)
-        ex_by_f = {f: self._exclude_terms(q, f) for f, _, _ in per}
-        if mode == "auto" and fast_ok:
-            small = all(
-                self._small_enough(
-                    f,
-                    sorted({t for at in atoms for t in at.terms}) + ex_by_f[f],
-                    positional=any(len(at.terms) > 1 for at in atoms),
-                )
-                for f, _, atoms in per
-            )
-            if small:
-                excluded = self._excluded_union(per, ex_by_f)
-                if excluded is not None:  # None = oversize tombstones
-                    return self._driver_multifield(q, per, n_groups, excluded, included)
-        small_ex = all(
-            not ex_by_f[f] or self._small_enough(f, ex_by_f[f]) for f, _, _ in per
-        )
-        if mode in ("wand", "auto") and not has_phrase and small_ex and fast_ok:
-            excluded = self._excluded_union(per, ex_by_f)
-            if excluded is not None:
-                return self._search_multifield_wand(
-                    q, a0, per, n_groups, excluded, included
-                )
-        return self._search_multifield_exhaustive(q, a0, per, gids, ex_by_f)
-
-    def _driver_multifield(
-        self, q: Query, per: list, n_groups: int,
-        excluded: np.ndarray | None, included: np.ndarray | None,
-    ) -> DataFrame:
-        """Driver fast path: per-field block decode + contribution concat —
-        one point-scan per field not yet in the block cache, then the same
-        pandas aggregate as the single-field driver exhaustive path."""
-        self.last_path = "driver_multifield"
-        doc_parts: list = []
-        gid_parts: list = []
-        w_parts: list = []
-        for f, w, atoms in per:
-            d, g, ww = self._driver_field_contrib(f, atoms, w)
-            doc_parts += d
-            gid_parts += g
-            w_parts += ww
-        return self._driver_score_contribs(
-            q, self._route(q), (doc_parts, gid_parts, w_parts), n_groups,
-            excluded, included,
-        )
-
-    def _search_multifield_wand(
-        self, q: Query, a0: str, per: list, n_groups: int,
-        excluded: np.ndarray | None, included: np.ndarray | None,
-    ) -> DataFrame:
-        """Distributed multi-field WAND: one fused scorer per segment over
-        the UNION of every field's posting blocks (a `fld` column rides
-        along so meta lookups key on (field, term) — analyzed terms may
-        contain any byte, so the field can't be smuggled into the term
-        string; each term carries its own field's avgdl + boosted idf).
-        Valid because segments align across the field indexes
-        (_validate_fields) — the per-segment block-max bounds stay true
-        upper bounds of the summed cross-field score, so pruning never
-        changes results (identity-tested vs the exhaustive plan)."""
-        self.last_path = "multifield_wand_distributed"
-        meta: dict[tuple[str, str], tuple[int, float, float]] = {}
-        blocks: DataFrame | None = None
-        cols = [
-            "seg", "term", "blk", "n", "first_doc", "last_doc", "max_tf", "min_dl",
-            "docs_bin", "tfs_bin", "dls_bin",
-        ]
-        for f, w, atoms in per:
-            meta_f, _ = self._term_meta(f, atoms)
-            if not meta_f:
-                continue
-            avgdl_f = self.stats[f]["avgdl"]
-            bl = self._blocks(f, list(meta_f)).select(*cols).withColumn("fld", F.lit(f))
-            blocks = bl if blocks is None else blocks.unionByName(bl)
-            for t, (gid, idf) in meta_f.items():
-                meta[(f, t)] = (gid, w * idf, avgdl_f)
-        if blocks is None:
-            return self._empty_hits()
-        scorer = wand.make_segment_scorer(
-            meta, n_groups, q.k + q.offset, self.stats[a0]["avgdl"], prune=True,
-            excluded=excluded if excluded is not None and excluded.size else None,
-            included=included,
-        )
-        out_schema = T.StructType(
-            [T.StructField("doc_id", T.LongType()), T.StructField("score", T.DoubleType())]
-        )
-        local_topk = blocks.groupBy("seg").applyInPandas(scorer, out_schema)
-        return self._finalize(local_topk, q, a0)
-
-    def _search_multifield_exhaustive(
-        self, q: Query, a0: str, per: list, gids: set[int],
-        ex_by_f: dict[str, list[str]],
-    ) -> DataFrame:
-        self.last_path = "multifield_exhaustive_distributed"
-        parts: list[DataFrame] = []
-        for f, w, atoms in per:
-            parts.extend(self._field_contrib_frames(f, atoms, w))
-        if not parts:
-            return self._empty_hits()
-        contrib = parts[0]
-        for p in parts[1:]:
-            contrib = contrib.unionByName(p)
-        scored = self._gmask_filter(contrib, gids)
-        for f, _, _ in per:
-            scored = self._anti_join_excluded(scored, f, ex_by_f[f])
-            if f != a0:  # _finalize anti-joins a0's tombstones already
-                scored = self._anti_join_tombstones(scored, f)
-        return self._finalize(scored, q, a0)
-
-    def _phrase_contrib(self, a: str, at: _Atom, idf_sum: float, avgdl: float) -> DataFrame:
-        """Positional intersection (Q3/Q4): per-segment pandas evaluation —
-        each segment holds all its docs' postings, so phrase matching needs no
-        cross-partition traffic. Ships RAW blocks to the executors and runs
-        the same vectorized matcher as the driver path (_phrase_seg_match):
-        decode + numpy doc intersection per segment, per-doc work only on
-        the intersection."""
-        terms = at.terms
-        slop = at.slop
-        gid = at.gid
-        blocks = self._blocks(a, sorted(set(terms))).select(
-            "seg", "term", "n", "first_doc",
-            "docs_bin", "tfs_bin", "dls_bin", "pos_bin",
-        )
-
-        out_schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("gid", T.IntegerType()),
-                T.StructField("contrib", T.DoubleType()),
-            ]
-        )
-
-        def match_seg(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            mf = _phrase_seg_match(pdf, terms, slop)
-            tf = mf["tf"].to_numpy()
-            dl = mf["dl"].to_numpy()
-            w = idf_sum * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
-            return pd.DataFrame(
-                {"doc_id": mf["doc_id"],
-                 "gid": pd.array([gid] * len(mf), dtype="int32"),
-                 "contrib": pd.array(w, dtype="float64")}
-            )
-
-        return blocks.groupBy("seg").applyInPandas(match_seg, out_schema)
-
-    def _search_tf_sort(self, q: Query, a: str, ex_terms: list[str] | None = None) -> DataFrame:
-        """Q8: sort=termfreq(text,t) desc, date desc (`SolrClientTool.java:147-151`)."""
-        self.last_path = "tf_sort_distributed"
-        term = analyze_text(q.groups[0][0], self._analyzer_of(a))[0][0]
-        rows = decode_blocks_df(self._blocks(a, [term])).select(
-            "doc_id", F.col("tf").cast("double").alias("score")
-        )
-        rows = self._anti_join_tombstones(rows, a)
-        rows = self._anti_join_excluded(rows, a, ex_terms or [])
-        sel = ["doc_id", "doc", "conv_id", "turn_idx", "ts", "role", "tool"]
-        extra = [c for c in (q.field_eq or {}) if c not in sel]
-        docs = self._docs(a).select(*sel, *extra)
-        if q.ts_after is not None:
-            docs = docs.filter(F.col("ts") >= F.lit(q.ts_after))
-        if q.require_no_tool:
-            docs = docs.filter(F.col("tool").isNull())
-        for fcol, fval in (q.field_eq or {}).items():
-            docs = docs.filter(self._field_cond(a, fcol, fval))
-        out = rows.join(docs, "doc_id")
-        if q.filter_docs is not None:
-            flt = self.spark.createDataFrame([(d,) for d in q.filter_docs], ["doc"])
-            out = out.join(F.broadcast(flt), "doc", "left_semi")
-        out = out.orderBy(
-            F.col("score").desc(), F.col("ts").desc(), "conv_id", "turn_idx"
-        ).select("doc", "score", "conv_id", "turn_idx")
-        if q.offset:
-            out = out.offset(q.offset)
-        return out.limit(q.k)
-
-    def _search_multiterm(
-        self, q: Query, a: str, driver_ok: bool = False,
-        ex_terms: list[str] | None = None, included: np.ndarray | None = None,
-    ) -> DataFrame:
-        """Q5/Q6/Q7: dictionary expansion → constant-score union (Lucene
-        CONSTANT_SCORE multi-term rewrite, the Solr 8 default)."""
-        self.last_path = "multiterm_distributed"
-        ex_terms = ex_terms or []
-        pattern = q.groups[0][0]
-        terms = None
-        if driver_ok:
-            terms = self._expand_cached(a, pattern, q.kind)
-            if terms is not None and self._small_enough(a, terms + ex_terms):
-                return self._driver_multiterm(
-                    q, a, terms, self._excluded_ids(a, ex_terms), included=included
-                )
-        if terms is None:
-            terms = self.expand_dictionary(a, pattern, q.kind)
-        if not terms:
-            # distinct stamp: the expansion matched nothing, no scan ran —
-            # without it the path would read "multiterm_distributed" for a
-            # query that executed nothing (ADVICE r4)
-            self.last_path = "empty_multiterm"
-            return self._empty_hits()
-        rows = decode_blocks_df(self._blocks(a, terms))
-        scored = rows.select("doc_id").distinct().withColumn("score", F.lit(1.0))
-        scored = self._anti_join_excluded(scored, a, ex_terms)
-        return self._finalize(scored, q, a)
-
-    def _driver_multiterm(
-        self, q: Query, a: str, terms: list[str], excluded: np.ndarray | None = None,
-        included: np.ndarray | None = None,
-    ) -> DataFrame:
-        self.last_path = "driver_multiterm"
-        if not terms:
-            return self._empty_hits()
-        pdf = self._collect_blocks(a, terms)
-        if pdf.empty:
-            return self._empty_hits()
-        docs = np.unique(
-            np.concatenate(
-                [codec.delta_decode(r.docs_bin, int(r.n)) for r in pdf.itertuples(index=False)]
-            ).astype(np.int64)
-        )
-        if excluded is None:
-            excluded = self._tombstones_strict(a)
-        if excluded.size:
-            docs = docs[~wand.in_sorted(docs, excluded)]
-        if included is not None:  # fq intersection BEFORE the k cut
-            docs = docs[wand.in_sorted(docs, included)]
-        # constant score → the k-boundary is decided purely by (conv, turn);
-        # doc_id order is (seg-major) not conv order, so the whole candidate
-        # set needs the conv/turn sort. With the driver doc cache present
-        # that's one pandas merge+sort (sub-100ms even at 10^5 candidates);
-        # without it, shipping a big candidate frame back into a distributed
-        # join would be slower than the distributed path — fall back.
-        cand = pd.DataFrame({"doc_id": docs, "score": np.full(docs.size, 1.0)})
-        if len(cand) > q.k + q.offset and a not in self._doc_cache:
-            self.last_path = "driver_multiterm_spill"
-            return self._finalize(
-                self.spark.createDataFrame(cand, schema="doc_id long, score double"), q, a
-            )
-        return self._driver_hydrate(cand, q)
 
     def search_str(self, s: str, k: int = 10, analyzer: str = "standard",
                    mode: str = "auto", query_id: str = "q", **kw) -> DataFrame:
@@ -1601,109 +1005,6 @@ class SearchEngine:
         from intuition_spark.query.explain import explain_doc as _explain_doc
 
         return _explain_doc(self, q, doc)
-
-
-def _phrase_seg_match(seg_pdf: pd.DataFrame, terms: list[str], slop: int) -> pd.DataFrame:
-    """Vectorized per-segment phrase matching over RAW posting blocks.
-
-    Decodes each phrase term's blocks into flat arrays (docs, tfs, dls and a
-    flat position stream), recovers per-doc absolute positions with one
-    global cumsum (delta positions restart per doc: subtracting the running
-    sum at each doc start re-bases every doc in a single vectorized op),
-    intersects the doc arrays with numpy FIRST, and only then runs the
-    per-doc sloppy-window matcher on the (usually small) intersection.
-    Replaces the per-doc dict building that made phrase latency scale with
-    posting-list length instead of match count.
-
-    Returns a DataFrame (doc_id, tf, dl) for docs where the phrase matches.
-    """
-    empty = pd.DataFrame({"doc_id": pd.array([], dtype="int64"),
-                          "tf": pd.array([], dtype="float64"),
-                          "dl": pd.array([], dtype="float64")})
-    uniq = list(dict.fromkeys(terms))
-    data: dict[str, tuple] = {}
-    for t in uniq:
-        rows_t = seg_pdf[seg_pdf["term"] == t]
-        if rows_t.empty:
-            return empty
-        # blocks of one (seg, term) hold consecutive doc ranges; first_doc
-        # ordering makes the concatenated doc array globally sorted
-        rows_t = rows_t.sort_values("first_doc")
-        docs_l, tfs_l, dls_l, flats = [], [], [], []
-        for row in rows_t.itertuples(index=False):
-            n = int(row.n)
-            docs_l.append(codec.delta_decode(row.docs_bin, n))
-            tfs_l.append(codec.varint_decode(row.tfs_bin, n))
-            dls_l.append(codec.varint_decode(row.dls_bin, n))
-            flats.append(codec.varint_decode(row.pos_bin).astype(np.int64))
-        docs = np.concatenate(docs_l).astype(np.int64)
-        tfs = np.concatenate(tfs_l).astype(np.int64)
-        dls = np.concatenate(dls_l).astype(np.float64)
-        flat = np.concatenate(flats)
-        if flat.size != int(tfs.sum()):
-            raise ValueError("position stream length mismatch")
-        g = np.cumsum(flat)
-        starts = np.concatenate(([0], np.cumsum(tfs)[:-1]))
-        base = np.where(starts > 0, g[np.maximum(starts - 1, 0)], 0)
-        posflat = g - np.repeat(base, tfs)
-        data[t] = (docs, tfs, dls, starts, posflat)
-    cand = data[uniq[0]][0]
-    for t in uniq[1:]:
-        cand = cand[np.isin(cand, data[t][0], assume_unique=True)]
-    if cand.size == 0:
-        return empty
-    idx = {t: np.searchsorted(data[t][0], cand) for t in uniq}
-    dls0 = data[uniq[0]][2][idx[uniq[0]]]
-    out_docs, out_tf, out_dl = [], [], []
-    for j in range(cand.size):
-        plists = []
-        for t in terms:  # in phrase order, repeats included
-            _, tfs_t, _, starts_t, pos_t = data[t]
-            i = idx[t][j]
-            s = starts_t[i]
-            plists.append(pos_t[s : s + tfs_t[i]])
-        tf = _phrase_tf(plists, slop)
-        if tf > 0:
-            out_docs.append(int(cand[j]))
-            out_tf.append(tf)
-            out_dl.append(float(dls0[j]))
-    return pd.DataFrame({"doc_id": pd.array(out_docs, dtype="int64"),
-                         "tf": pd.array(out_tf, dtype="float64"),
-                         "dl": pd.array(out_dl, dtype="float64")})
-
-
-def _phrase_tf(plists: list[np.ndarray], slop: int, weighted: bool | None = None) -> float:
-    """Shared sloppy-phrase semantics — see oracle/bm25_oracle.py.
-
-    ``weighted`` (default: SLOPPY_WEIGHTED, i.e. Lucene parity) weights each
-    sloppy match by 1/(1+distance) where distance is the extra spread of the
-    matched window beyond an exact phrase — Lucene SloppyPhraseScorer's
-    sloppyFreq (matchLength). Exact matches (slop=0) always weigh 1, so
-    phrase scoring is unchanged. ``weighted=False`` restores the simplified
-    every-match-counts-1 mode (round-1 behavior)."""
-    if weighted is None:
-        weighted = SLOPPY_WEIGHTED
-    first = plists[0]
-    tf = 0.0
-    for p0 in first.tolist():
-        ok = True
-        prev = p0
-        for i, plist in enumerate(plists[1:], start=1):
-            if slop == 0:
-                if p0 + i not in plist:
-                    ok = False
-                    break
-                prev = p0 + i
-            else:
-                nxt = plist[(plist > prev) & (plist <= p0 + slop + i)]
-                if nxt.size == 0:
-                    ok = False
-                    break
-                prev = int(nxt.min())
-        if ok:
-            dist = (prev - p0) - (len(plists) - 1)  # 0 for an exact match
-            tf += 1.0 / (1.0 + dist) if weighted else 1.0
-    return tf
 
 
 def rx_escape(c: str) -> str:

@@ -8,8 +8,9 @@ This module provides the same two surfaces over the engine:
 
 * :func:`explain` — runs the query and reports the parse (the ENGINE'S own
   `_parse_atoms` output — atoms carry their raw text, nothing re-derived),
-  the EXECUTED path (observed from the engine's `last_path` instrumentation),
-  the driver-admission arithmetic (Σdf / Σcf vs budgets, folded with the
+  the EXECUTED path and the kernel's score mode and prune flag (observed from
+  the engine's `last_path`/`last_kernel` instrumentation), the
+  driver-admission arithmetic (Σdf / Σcf vs budgets, folded with the
   fq fast-path resolution exactly as the router folds it), and the
   filterCache resolution.
 * :func:`explain_doc` — a per-document score breakdown: one record per
@@ -19,19 +20,20 @@ This module provides the same two surfaces over the engine:
   mm=100% group accounting and every non-scoring gate — fq predicates,
   MUST_NOT exclusions, tombstones — each evaluated across EVERY scored
   field (multi-field semantics: a doc excluded/deleted in any field is out,
-  `SearchEngine._excluded_union`).
+  as in the kernel's exclude set).
 
 Both execute like Solr's debug mode does — explain() observes a real run
 (driver paths eagerly, distributed paths at plan time — see ``wall_s``);
-explain_doc() reuses the engine's own block cache, decode, and sloppy-phrase
-matcher (`_phrase_seg_match`), so the numbers ARE the scorer's numbers.
+explain_doc() reuses the engine's own block cache, decode, and the kernel's
+sloppy-phrase matcher (`wand._phrase_seg_match`), so the numbers ARE the
+kernel's numbers.
 
 Duplicate-term caveat (mirrors the engine's documented limitation at
-`_term_meta`): a term reused across several single-term atoms is scored once
-— explain_doc keeps one contribution per distinct (field, term), so the sum
-matches the exhaustive scorer; queries reusing a term across GROUPS return
-no hits in the engine (group-coverage shortfall) and explain_doc's mm
-accounting reproduces that.
+`_kernel_spec`): a term reused across several single-term atoms is scored
+once, under its first gid — explain_doc keeps one contribution per distinct
+(field, term), so the sum matches the kernel; queries reusing a term across
+GROUPS return no hits in the engine (group-coverage shortfall) and
+explain_doc's mm accounting reproduces that.
 """
 
 from __future__ import annotations
@@ -47,18 +49,10 @@ from intuition_spark.index import codec
 from intuition_spark.index.builder import decode_blocks_df
 from intuition_spark.query import wand
 from intuition_spark.query.ast import Query
+from intuition_spark.query.wand import bm25_idf
 
 _SCORING_KINDS = ("term", "and", "or_groups", "phrase", "proximity")
 _MULTITERM_KINDS = ("wildcard", "regex", "fuzzy")
-
-
-def _fast_path_state(engine, a: str, q: Query):
-    """(fast_ok, fq_ids, dist_filter, fq_preds) — delegates to the engine's
-    own ``_fq_fold``, the SAME code path _search_uncached runs before
-    admission, so the report can never claim a routing state the router
-    doesn't use (ADVICE r4: the previous private re-implementation could
-    drift)."""
-    return engine._fq_fold(a, q)
 
 
 def explain(engine, q: Query, mode: str = "auto") -> dict:
@@ -76,8 +70,6 @@ def explain(engine, q: Query, mode: str = "auto") -> dict:
     path WOULD this take", like Solr's debug on a queryResultCache hit),
     but don't put explain() on a per-request hot path.
     """
-    from intuition_spark.query.engine import bm25_idf
-
     a = engine._route(q)
     engine._ensure_warm(a)
     t0 = time.time()
@@ -93,7 +85,14 @@ def explain(engine, q: Query, mode: str = "auto") -> dict:
         rederive_s = round(time.time() - t1, 4)
 
     fields = dict(q.fields) if q.fields else {a: 1.0}
-    fast_ok, fq_ids, dist_filter, fq_preds = _fast_path_state(engine, a, q)
+    # the engine's own fq fold and kernel spec — the SAME code the router
+    # runs before admission, so the report can never claim a routing state
+    # the router doesn't use (ADVICE r4)
+    has_fq, fq_ids = engine._fq_fold(a, q)
+    fast_ok = not has_fq or fq_ids is not None
+    built = engine._kernel_spec(q, fields, prune=mode != "exhaustive")
+    spec_terms = built[0].terms if built else {}
+    score_mode, prune = engine.last_kernel or (None, None)
     out: dict = {
         "query_id": q.query_id,
         "kind": q.kind,
@@ -101,6 +100,8 @@ def explain(engine, q: Query, mode: str = "auto") -> dict:
         "offset": q.offset,
         "mode_requested": mode,
         "path": engine.last_path,
+        "score_mode": score_mode,
+        "prune": prune,
         "result_cache_hit": cached,
         "routed_index": a,
         "snapshot_id": (engine._snap.get(a) or {}).get("snapshot_id"),
@@ -119,36 +120,26 @@ def explain(engine, q: Query, mode: str = "auto") -> dict:
             "N": int(stats["N"]),
             "avgdl": stats["avgdl"],
         }
+        words = sorted(t for g, t in spec_terms if g == f)
+        atoms_info = []
         if q.kind in _MULTITERM_KINDS:
-            pattern = q.groups[0][0]
-            terms = engine._expand_cached(f, pattern, q.kind)
-            if terms is None:
-                terms = engine.expand_dictionary(f, pattern, q.kind)
             finfo["multiterm"] = {
-                "pattern": pattern,
+                "pattern": q.groups[0][0],
                 "rewrite": "constant_score",  # Lucene CONSTANT_SCORE rewrite
-                "n_expanded": len(terms),
-                "expanded_sample": sorted(terms)[:20],
+                "n_expanded": len(words),
+                "expanded_sample": words[:20],
             }
-            terms_for_admission = sorted(terms)
-            positional = False
-            atoms_info = []
         elif q.kind == "tf_sort":
-            term = analyze_text(q.groups[0][0], engine._analyzer_of(f))[0][0]
-            terms_for_admission = [term]
-            positional = False
-            dfs = engine._dfs_for_terms(f, [term])
+            dfs = engine._dfs_for_terms(f, words)
             atoms_info = [{
-                "gid": 0, "atom": q.groups[0][0], "terms": [term],
-                "per_term": [{"term": term, "df": int(dfs[term])}],
+                "gid": 0, "atom": q.groups[0][0], "terms": [t],
+                "per_term": [{"term": t, "df": int(dfs[t])}],
                 "note": "ranked by raw termfreq desc, ts desc — no BM25",
-            }]
+            } for t in words]
         else:
             atoms = engine._parse_atoms(q, f)  # the engine's own parse
-            all_terms = sorted({t for at in atoms for t in at.terms})
-            dfs = engine._dfs_for_terms(f, all_terms)
+            dfs = engine._dfs_for_terms(f, sorted({t for at in atoms for t in at.terms}))
             cache = engine._dict_cache.get(f)
-            atoms_info = []
             for at in atoms:
                 atoms_info.append({
                     "gid": at.gid,
@@ -172,11 +163,9 @@ def explain(engine, q: Query, mode: str = "auto") -> dict:
                         for t in at.terms
                     ],
                 })
-            terms_for_admission = all_terms
-            positional = any(len(at.terms) > 1 for at in atoms)
-        ex_terms = engine._exclude_terms(q, f)
+        adm_terms = built[1][f] if built else []
+        positional = bool(built and built[2][f])
         dcache = engine._dict_cache.get(f)
-        adm_terms = terms_for_admission + ex_terms
         sum_df = (
             int(sum(dcache.get(t, (0, 0))[0] for t in adm_terms)) if dcache else None
         )
@@ -185,51 +174,40 @@ def explain(engine, q: Query, mode: str = "auto") -> dict:
             if (dcache and positional)
             else None
         )
+        small = engine._small_enough(f, adm_terms, positional)
+        tombs_small = engine._tombstones(f) is not None
         finfo["atoms"] = atoms_info
-        finfo["excluded_terms"] = ex_terms
+        finfo["excluded_terms"] = engine._exclude_terms(q, f)
         finfo["admission"] = {
             "sum_df": sum_df,
             "postings_budget": engine.SMALL_QUERY_POSTINGS,
             "positional": positional,
             "sum_cf": sum_cf,
             "positions_budget": engine.SMALL_QUERY_POSITIONS if positional else None,
-            # what `auto` mode actually checks: postings volume AND the fq
-            # fast-path state (an oversize/distributed fq bars the driver)
-            # AND a driver-side-bounded tombstone set (an oversize one keeps
-            # exclusion distributed, so driver scorers are barred too)
-            "postings_small_enough": engine._small_enough(f, adm_terms, positional),
+            # what `auto` mode actually checks: postings volume (scored and
+            # MUST_NOT terms) AND the fq fast-path state (an oversize fq bars
+            # the driver) AND a driver-side-bounded tombstone set
+            "postings_small_enough": small,
             "fq_fast_path_ok": fast_ok,
-            "tombstones_small": engine._tombstones(f) is not None,
-            "driver_eligible": fast_ok
-            and engine._tombstones(f) is not None
-            and engine._small_enough(f, adm_terms, positional),
+            "tombstones_small": tombs_small,
+            "driver_eligible": fast_ok and tombs_small and small,
         }
         per_field.append(finfo)
     out["fields"] = per_field
 
-    if fq_preds:
+    if has_fq:
         preds = [f"{fcol}:{fval!r}" for fcol, fval in sorted((q.field_eq or {}).items())]
         if q.require_no_tool:
             preds.append("tool IS NULL")
         if q.ts_after is not None:
             preds.append(f"ts >= {q.ts_after}")
-        if dist_filter:
-            out["fq"] = {
-                "predicates": preds,
-                "note": "filter_docs present — fq predicates apply inside the "
-                        "distributed path; the filterCache is not consulted",
-            }
-        else:
-            out["fq"] = {
-                "predicates": preds,
-                "resolved_n_ids": None if fq_ids is None else int(fq_ids.size),
-                "oversize_distributed": fq_ids is None,
-                "max_ids": engine.FQ_MAX_IDS,
-            }
-    if dist_filter:
-        out["filter_docs"] = {
-            "n": len(q.filter_docs),
-            "note": "arbitrary doc-list fq — always the distributed path",
+        if q.filter_docs is not None:
+            preds.append(f"doc IN [{len(set(q.filter_docs))} docs]")
+        out["fq"] = {
+            "predicates": preds,
+            "resolved_n_ids": None if fq_ids is None else int(fq_ids.size),
+            "oversize_distributed": fq_ids is None,
+            "max_ids": engine.FQ_MAX_IDS,
         }
     return out
 
@@ -263,8 +241,6 @@ def _doc_meta(engine, a: str, q: Query, doc: str):
 
 def explain_doc(engine, q: Query, doc: str) -> dict:
     """Per-document score breakdown (the Lucene ``Explanation`` analogue)."""
-    from intuition_spark.query.engine import B, K1, bm25_idf, _phrase_seg_match
-
     a = engine._route(q)
     engine._ensure_warm(a)
     if q.fields:
@@ -300,11 +276,11 @@ def explain_doc(engine, q: Query, doc: str) -> dict:
                 if flat_terms
                 else pd.DataFrame(columns=["term"])
             )
-            # distinct-term dedup, last atom's gid — exactly the engine's
-            # `single_terms` dict in _driver_field_contrib
+            # distinct-term dedup, first atom's gid — exactly the engine's
+            # kernel spec (_kernel_spec)
             single_terms: dict[str, object] = {}
             for at in singles:
-                single_terms[at.terms[0]] = at
+                single_terms.setdefault(at.terms[0], at)
             for t, at in single_terms.items():
                 hit = _find_posting(flat_pdf[flat_pdf["term"] == t], doc_id)
                 if hit is None:
@@ -331,7 +307,7 @@ def explain_doc(engine, q: Query, doc: str) -> dict:
                     if probe is None:
                         continue  # first token absent → phrase can't match
                     seg = probe[2]
-                    mf = _phrase_seg_match(
+                    mf = wand._phrase_seg_match(
                         ph_pdf[ph_pdf["seg"] == seg], at.terms, at.slop
                     )
                     mrow = mf[mf["doc_id"] == doc_id]
@@ -348,8 +324,7 @@ def explain_doc(engine, q: Query, doc: str) -> dict:
                         "idf_sum": idf_sum, "sloppy_tf": tf, "dl": dl,
                         "avgdl": avgdl,
                         "contribution": float(
-                            w * idf_sum * tf * (K1 + 1.0)
-                            / (tf + K1 * (1.0 - B + B * dl / avgdl))
+                            w * idf_sum * wand._weight(tf, dl, avgdl)
                         ),
                     })
                     groups_matched.add(at.gid)
@@ -389,7 +364,7 @@ def explain_doc(engine, q: Query, doc: str) -> dict:
 
     # ---- non-scoring gates, each evaluated across EVERY scored field -----
     # (multi-field semantics: a doc containing an excluded term in ANY
-    # field, or tombstoned in ANY field's index, is out — _excluded_union)
+    # field, or tombstoned in ANY field's index, is out — as in the kernel)
     gates: list[dict] = []
     any_ex = {f: ex for f, ex in ex_by_f.items() if ex}
     if any_ex:

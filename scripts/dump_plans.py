@@ -1,9 +1,9 @@
 """Dump formatted physical plans for the headline queries → PLANS.md.
 
 Evidence that the plans are the ones we want: term-IN pushdown at the
-postings scan, column pruning, broadcast joins for per-query dims,
-TakeOrderedAndProject for top-k, whole-stage codegen around the scoring
-expressions.
+postings scan, column pruning, ONE per-segment kernel (FlatMapGroupsInPandas,
+or FlatMapCoGroupsInPandas when distributed ids ride along) per query, and
+TakeOrderedAndProject for top-k.
 """
 
 from __future__ import annotations
@@ -39,14 +39,15 @@ def main() -> None:
     sections = []
     cases = [
         ("WAND top-k (two-term AND)", Query("p1", "and", [["braf"], ["v600e"]], k=10), "wand"),
+        # exhaustive = the same kernel with pruning off: same plan shape
         ("Exhaustive scorer (OR-groups)", Query("p2", "or_groups", [["braf", "kras"], ["v600e", "g12c"]], k=10), "exhaustive"),
         ("Phrase (positional)", Query("p3", "phrase", [["braf v600e"]], k=10), "exhaustive"),
         # force the distributed path: with mode="auto" small queries take the
         # driver serving path whose "plan" is just a LocalTableScan of results
         ("tf-sort (termfreq ranking)", Query("p4", "tf_sort", [["spark"]], k=10), "exhaustive"),
-        # r4: fused multi-field WAND — check ONE Union of two pushdown scans
+        # fused multi-field WAND — check ONE Union of two pushdown scans
         # feeding ONE Exchange(seg) + FlatMapGroupsInPandas (no per-field
-        # shuffles), then the usual broadcast hydration + TakeOrdered
+        # shuffles), then the usual hydration join + TakeOrdered
         ("Multi-field WAND (edismax qf, standard + ws)",
          Query("p5", "and", [["braf"], ["v600e"]], k=10,
                fields={"standard": 1.0, "ws": 0.5}), "wand"),
@@ -71,7 +72,7 @@ def main() -> None:
     q_fq = Query("p7", "and", [["braf"], ["v600e"]], k=10,
                  field_eq={"role": "user"})
     out = eng_fq.search(q_fq, mode="wand")
-    assert eng_fq.last_path == "wand_distfq", eng_fq.last_path
+    assert eng_fq.last_path == "distributed", eng_fq.last_path
     sections.append(
         "## WAND under oversize fq (distributed filterCache, cogrouped)"
         f"\n\n```\n{plan_of(out)}\n```\n"
@@ -112,7 +113,7 @@ def main() -> None:
     eng_dt.TOMB_MAX_IDS = 1
     out = eng_dt.search(Query("p8", "and", [["braf"], ["v600e"]], k=10),
                         mode="wand")
-    assert eng_dt.last_path == "wand_disttomb", eng_dt.last_path
+    assert eng_dt.last_path == "distributed", eng_dt.last_path
     sections.append(
         "## WAND under oversize tombstones (distributed exclusion, cogrouped)"
         f"\n\n```\n{plan_of(out)}\n```\n"
@@ -141,9 +142,10 @@ def main() -> None:
         "# PLANS — formatted physical plans of the headline queries\n\n"
         "Generated by `python scripts/dump_plans.py` over a 20k-turn index\n"
         "(8 segments). Things to check: `PushedFilters: [In(term, …)]` on the\n"
-        "postings scan, `ReadSchema` without unused columns, `BroadcastExchange`\n"
-        "for per-query dims, `TakeOrderedAndProject` for top-k, and\n"
-        "`WholeStageCodegen` spans around the scoring expressions.\n\n"
+        "postings scan, `ReadSchema` without unused columns, one\n"
+        "`FlatMapGroupsInPandas` (the segment kernel; `FlatMapCoGroupsInPandas`\n"
+        "when oversize fq ids or tombstones ride along) per query, and\n"
+        "`TakeOrderedAndProject` for top-k.\n\n"
     )
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write(header + "\n".join(sections))

@@ -2,7 +2,7 @@
 its oracle_sql() on DuckDB at the given sf dir; compare row count, column
 names, and order-insensitive value multiset.
 
-Usage: python scripts/gate_check.py [--extra] [sf_dir] [query_name ...]
+Usage: python scripts/gate_check.py [--extra] sf_dir [query_name ...]
 
 --extra additionally runs the EXTRA registry (the oracle-checked entries past
 the driver's 50-entry window, normally pytest-gated at sf0.001) against the
@@ -11,6 +11,7 @@ same DuckDB views — useful for checking them at a larger sf.
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 import time
@@ -29,11 +30,20 @@ def normalize(df: pd.DataFrame) -> list[tuple]:
     return sorted(rows, key=repr)
 
 
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("--extra", action="store_true", help="also run the EXTRA registry")
+    p.add_argument("sf_dir", help="directory holding the <table>.parquet files")
+    p.add_argument("query_name", nargs="*", help="run only these entries")
+    args = p.parse_intermixed_args(argv)
+    if not os.path.isdir(args.sf_dir):
+        p.error(f"sf_dir {args.sf_dir!r} is not a directory")
+    return args
+
+
 def main() -> int:
-    args = [a for a in sys.argv[1:] if a != "--extra"]
-    with_extra = "--extra" in sys.argv[1:]
-    sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    only = set(args[1:])
+    args = parse_args()
+    sf_dir, with_extra, only = args.sf_dir, args.extra, set(args.query_name)
 
     import __spark_entry__ as entrymod
     from intuition_spark.session import get_spark

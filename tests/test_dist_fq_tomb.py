@@ -13,6 +13,7 @@ result identity across every executor."""
 
 import os
 
+import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -40,7 +41,8 @@ def plain_ix(spark, tmp_root):
 
 @pytest.fixture(scope="module")
 def tomb_ix(spark, tmp_root):
-    """Index where a delta tombstoned 80 docs (tombstone-path tests)."""
+    """Index where a delta tombstoned 80 docs (tombstone-path tests) + the
+    live rows' oracle."""
     tbl = generate_transcripts(1200, max_tokens=40).to_pandas()
     base = tbl.iloc[:1000].copy()
     updated = base.iloc[:80].copy()
@@ -54,12 +56,19 @@ def tomb_ix(spark, tmp_root):
                 analyzer="standard", n_segments=4)
     res = merge_delta(spark, IndexPaths(ix_dir), spark.read.parquet(delta_src))
     assert res["n_tombstoned"] == 80
-    return ix_dir
+    live = pd.concat([updated, base.iloc[80:]]).to_dict("records")
+    return ix_dir, build_oracle_index(live, "standard")
 
 
 def _rows(df):
     return [(r["doc"], round(r["score"], 9), r["conv_id"], r["turn_idx"])
             for r in df.collect()]
+
+
+def _cogrouped(df) -> bool:
+    """The kernel received distributed id partitions (oversize fq or
+    tombstones) through the cogroup."""
+    return "FlatMapCoGroupsInPandas" in df._jdf.queryExecution().executedPlan().toString()
 
 
 # ---------------------------------------------------------------- fq path
@@ -85,8 +94,9 @@ def test_oversize_fq_keeps_wand(spark, plain_ix):
     for q in QUERIES:
         exp = oracle_search(oracle, q)
         got_ref = _rows(ref.search(q, mode="auto"))
-        got_wand = _rows(sml.search(q, mode="wand"))
-        assert sml.last_path == "wand_distfq", q.query_id
+        df = sml.search(q, mode="wand")
+        assert sml.last_path == "distributed" and _cogrouped(df), q.query_id
+        got_wand = _rows(df)
         got_ex = _rows(sml.search(q, mode="exhaustive"))
         assert got_wand == got_ex == got_ref, q.query_id
         assert [d for d, _, _, _ in got_wand] == [d for d, _ in exp], q.query_id
@@ -96,16 +106,17 @@ def test_oversize_fq_auto_routes_distfq(spark, plain_ix):
     _, sml, _ = _fq_engines(spark, plain_ix)
     q = Query("dq_auto", "and", [["spark"], ["data"]], k=10,
               field_eq={"role": "user"})
-    sml.search(q, mode="auto")
-    assert sml.last_path == "wand_distfq"
+    df = sml.search(q, mode="auto")
+    assert sml.last_path == "distributed" and _cogrouped(df)
 
 
 def test_oversize_ts_range_fq(spark, plain_ix):
     ref, sml, rows = _fq_engines(spark, plain_ix)
     mid_ts = sorted(r["ts"] for r in rows)[len(rows) // 2]
     q = Query("dq_ts", "term", [["spark"]], k=10, ts_after=mid_ts)
-    got = _rows(sml.search(q, mode="wand"))
-    assert sml.last_path == "wand_distfq"
+    df = sml.search(q, mode="wand")
+    assert sml.last_path == "distributed" and _cogrouped(df)
+    got = _rows(df)
     assert got == _rows(ref.search(q, mode="auto"))
     assert got == _rows(sml.search(q, mode="exhaustive"))
 
@@ -114,9 +125,8 @@ def test_distfq_plan_is_cogrouped_wand(spark, plain_ix):
     _, sml, _ = _fq_engines(spark, plain_ix)
     q = Query("dq_plan", "term", [["spark"]], k=10, field_eq={"role": "user"})
     df = sml.search(q, mode="wand")
-    assert sml.last_path == "wand_distfq"
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" in plan  # the scorer, not exhaustive
+    assert sml.last_path == "distributed"
+    assert _cogrouped(df)  # the kernel, fed the fq ids per segment
 
 
 def test_distfq_respects_paging(spark, plain_ix):
@@ -125,7 +135,7 @@ def test_distfq_respects_paging(spark, plain_ix):
     pages = []
     for off in (0, 5, 10):
         pages += _rows(sml.page(base, offset=off))
-        assert sml.last_path in ("wand_distfq", "result_cache")
+        assert sml.last_path in ("distributed", "result_cache")
     onego = _rows(ref.search(Query("dq_pg15", "term", [["data"]], k=15,
                                    field_eq={"role": "user"})))
     assert pages == onego
@@ -135,7 +145,7 @@ def test_explain_reports_oversize_fq(spark, plain_ix):
     _, sml, _ = _fq_engines(spark, plain_ix)
     q = Query("dq_explain", "term", [["spark"]], k=10, field_eq={"role": "user"})
     rep = sml.explain(q, mode="wand")
-    assert rep["path"] == "wand_distfq"
+    assert rep["path"] == "distributed"
     assert rep["fq"]["oversize_distributed"] is True
     assert rep["fq"]["resolved_n_ids"] is None
     assert rep["fields"][0]["admission"]["driver_eligible"] is False
@@ -143,8 +153,9 @@ def test_explain_reports_oversize_fq(spark, plain_ix):
 
 # ---------------------------------------------------------- tombstone path
 def _tomb_engines(spark, tomb_ix):
-    ref = SearchEngine(spark, {"standard": tomb_ix})  # default bounds: array
-    big = SearchEngine(spark, {"standard": tomb_ix})
+    ix_dir, _ = tomb_ix
+    ref = SearchEngine(spark, {"standard": ix_dir})  # default bounds: array
+    big = SearchEngine(spark, {"standard": ix_dir})
     big.TOMB_MAX_IDS = 10  # 80 tombstones > 10 → oversize regime
     return ref, big
 
@@ -153,37 +164,43 @@ TOMB_QUERIES = [
     Query("dt_and", "and", [["spark"], ["data"]], k=10),
     Query("dt_term", "term", [["query"]], k=10),
     Query("dt_or", "or_groups", [["braf", "kras"], ["v600e", "g12c"]], k=10),
+    Query("dt_phrase", "phrase", [["braf v600e"]], k=10),  # 3 of its docs are deleted
 ]
 
 
 def test_oversize_tombstones_never_materialize(spark, tomb_ix):
     ref, big = _tomb_engines(spark, tomb_ix)
+    _, oracle = tomb_ix
     for q in TOMB_QUERIES:
         got_ref = _rows(ref.search(q, mode="auto"))
-        got_wand = _rows(big.search(q, mode="wand"))
-        assert big.last_path == "wand_disttomb", q.query_id
+        df = big.search(q, mode="wand")
+        assert big.last_path == "distributed" and _cogrouped(df), q.query_id
+        got_wand = _rows(df)
         got_ex = _rows(big.search(q, mode="exhaustive"))
         got_auto = _rows(big.search(q, mode="auto"))
         assert got_wand == got_ex == got_auto == got_ref, q.query_id
+        # deleted docs count in N/avgdl until compaction, so the live-rows
+        # oracle's scores differ; its ranked docs must not
+        assert [r[0] for r in got_wand] == [d for d, _ in oracle_search(oracle, q)], q.query_id
     # the sentinel proves nothing was collected: every cached value is None
     assert big._tomb_cache and all(v is None for v in big._tomb_cache.values())
     # and the reference engine DID take the driver path for the same queries
     ref.search(TOMB_QUERIES[0], mode="auto")
-    assert ref.last_path in ("driver_wand", "result_cache")
+    assert ref.last_path in ("driver", "result_cache")
 
 
 def test_oversize_tombstones_auto_bars_driver(spark, tomb_ix):
     _, big = _tomb_engines(spark, tomb_ix)
     q = Query("dt_auto", "term", [["kinase"]], k=10)
-    big.search(q, mode="auto")
-    assert big.last_path == "wand_disttomb"
+    df = big.search(q, mode="auto")
+    assert big.last_path == "distributed" and _cogrouped(df)
 
 
 def test_oversize_tombstones_tf_sort_and_multiterm(spark, tomb_ix):
     ref, big = _tomb_engines(spark, tomb_ix)
     qt = Query("dt_tf", "tf_sort", [["data"]], k=10)
     assert _rows(big.search(qt)) == _rows(ref.search(qt))
-    assert big.last_path == "tf_sort_distributed"
+    assert big.last_path == "distributed"
     qw = Query("dt_wc", "wildcard", [["kin*"]], k=10)
     assert _rows(big.search(qw)) == _rows(ref.search(qw))
 
@@ -193,8 +210,9 @@ def test_oversize_fq_and_tombstones_compose(spark, tomb_ix):
     big.FQ_MAX_IDS = 5
     q = Query("dt_both", "and", [["spark"], ["data"]], k=10,
               field_eq={"role": "user"})
-    got = _rows(big.search(q, mode="wand"))
-    assert big.last_path == "wand_distfq"  # fq side wins the stamp; both ride
+    df = big.search(q, mode="wand")
+    assert big.last_path == "distributed" and _cogrouped(df)  # both ride
+    got = _rows(df)
     assert got == _rows(ref.search(q, mode="auto"))
     assert got == _rows(big.search(q, mode="exhaustive"))
 

@@ -76,22 +76,28 @@ def test_or_group_queries(engine, oracle_ix, qid):
 @pytest.mark.parametrize("qid", ["phrase_00", "phrase_01", "phrase_03", "phrase_04"])
 def test_phrase_queries(engine, oracle_ix, qid):
     _run_and_compare(engine, oracle_ix, QUERIES[qid], "exhaustive")
+    _run_and_compare(engine, oracle_ix, QUERIES[qid], "wand")
     _run_and_compare(engine, oracle_ix, QUERIES[qid], "auto")  # driver fast path
 
 
 @pytest.mark.parametrize("qid", ["prox_00", "prox_02", "prox_05"])
 def test_proximity_queries(engine, oracle_ix, qid):
     _run_and_compare(engine, oracle_ix, QUERIES[qid], "exhaustive")
+    _run_and_compare(engine, oracle_ix, QUERIES[qid], "wand")
     _run_and_compare(engine, oracle_ix, QUERIES[qid], "auto")  # driver fast path
 
 
 @pytest.mark.parametrize("qid", ["wild_00", "wild_01", "wild_02"])
 def test_wildcard_queries(engine, oracle_ix, qid):
+    _run_and_compare(engine, oracle_ix, QUERIES[qid], "exhaustive")
+    _run_and_compare(engine, oracle_ix, QUERIES[qid], "wand")
     _run_and_compare(engine, oracle_ix, QUERIES[qid], "auto")
 
 
 @pytest.mark.parametrize("qid", ["fuzzy_00", "fuzzy_01", "fuzzy_02"])
 def test_fuzzy_queries_from_reference_set(engine, oracle_ix, qid):
+    _run_and_compare(engine, oracle_ix, QUERIES[qid], "exhaustive")
+    _run_and_compare(engine, oracle_ix, QUERIES[qid], "wand")
     _run_and_compare(engine, oracle_ix, QUERIES[qid], "auto")
 
 
@@ -110,9 +116,10 @@ def test_fieldq_queries_from_reference_set(engine, oracle_ix, qid):
 def test_tf_sort_queries(engine, oracle_ix, qid):
     q = QUERIES[qid]
     expected = oracle_search(oracle_ix[q.effective_analyzer], q)
-    got = [(r["doc"], r["score"]) for r in engine.search(q).collect()]
-    assert [d for d, _ in got] == [d for d, _ in expected]
-    assert [s for _, s in got] == [s for _, s in expected]
+    for mode in ("auto", "wand", "exhaustive"):
+        got = [(r["doc"], r["score"]) for r in engine.search(q, mode=mode).collect()]
+        assert [d for d, _ in got] == [d for d, _ in expected], mode
+        assert [s for _, s in got] == [s for _, s in expected], mode
 
 
 def test_per_turn_text_invariant(spark, engine, corpus_tbl):

@@ -7,13 +7,14 @@ here at corpus level — the unit version lives in test_wand_prune.py."""
 
 import os
 import random
+from dataclasses import replace
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
 from intuition_spark.corpus import generate_transcripts
-from intuition_spark.index.builder import build_index
+from intuition_spark.index.builder import SEG_SHIFT, build_index
 from intuition_spark.oracle.bm25_oracle import build_oracle_index, oracle_search
 from intuition_spark.query.ast import Query
 from intuition_spark.query.engine import SearchEngine
@@ -28,6 +29,8 @@ POOL = [
     "alpha kappa beta mu",
     "mu nu alpha",
 ]
+# a fixed doc list for the filter_docs cases: every third conversation
+FILTER_DOCS = [f"conv_{c:08d}:{t}" for c in range(0, 300, 3) for t in range(20)]
 
 
 @pytest.fixture(scope="module")
@@ -53,17 +56,33 @@ QUERIES = [
     Query("tt_fq", "term", [["gamma"]], k=10, field_eq={"role": "assistant"}),
     Query("tt_k1", "term", [["delta"]], k=1),
     Query("tt_k_large", "term", [["alpha"]], k=500),
+    # tf ties at the k boundary span segments and are broken by ts desc
+    Query("tt_tf", "tf_sort", [["beta"]], k=10),
+    Query("tt_tf_fd", "tf_sort", [["beta"]], k=10, filter_docs=FILTER_DOCS),
+    Query("tt_phrase_fd", "phrase", [["alpha beta"]], k=10, filter_docs=FILTER_DOCS),
+    # MUST_NOT on a head term whose postings push the query over the bound
+    Query("tt_not_head", "term", [["gamma"]], k=10, exclude=["alpha"]),
 ]
 
 
 @pytest.mark.parametrize("q", QUERIES, ids=[q.query_id for q in QUERIES])
-def test_tie_plateau_rank_identity(tie_setup, q):
+def test_tie_plateau_rank_identity(tie_setup, q, monkeypatch):
     eng, oracle = tie_setup
     exp = oracle_search(oracle, q)
-    modes = ("auto", "exhaustive") if q.kind == "phrase" else ("auto", "wand", "exhaustive")
-    for mode in modes:
+    if q.exclude:
+        # the positive term alone is driver-admissible; with the excluded
+        # head term's postings the query is not
+        monkeypatch.setattr(eng, "SMALL_QUERY_POSTINGS", len(oracle.postings["gamma"]))
+    if q.kind == "tf_sort":
+        full = oracle_search(oracle, replace(q, k=10**6))
+        tied = [d for d, s in full if s == exp[-1][1]]
+        ids = eng._doc_cache["standard"].set_index("doc").loc[tied, "doc_id"]
+        segs = {int(i) >> SEG_SHIFT for i in ids}
+        assert len(tied) > sum(s == exp[-1][1] for _, s in exp) and len(segs) > 1
+    for mode in ("auto", "wand", "exhaustive"):
         eng._result_cache.clear()
         got = [(r["doc"], r["score"]) for r in eng.search(q, mode=mode).collect()]
+        assert eng.last_path == ("driver" if mode == "auto" and not q.exclude else "distributed")
         assert [d for d, _ in got] == [d for d, _ in exp], (
             f"{q.query_id} [{mode}]: {[d for d, _ in got][:6]} vs {[d for d, _ in exp][:6]}"
         )

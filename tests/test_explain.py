@@ -54,12 +54,11 @@ def test_explain_doc_contributions_sum_to_hit_score(ex_setup, q, mode):
     eng, _ = ex_setup
     hits = eng.search(q, mode=mode).collect()
     assert hits, f"{q.query_id} returned no hits"
-    if mode == "wand" and not eng.last_path.startswith("empty"):
-        # the forced-wand leg really exercised a distributed executor
-        # (phrase/proximity shapes legitimately reroute to exhaustive)
-        assert "distributed" in eng.last_path, eng.last_path
-    if mode == "exhaustive":
-        assert "exhaustive_distributed" in eng.last_path, eng.last_path
+    if mode != "auto":
+        # the forced legs really ran the distributed placement, exhaustive
+        # with pruning off
+        assert eng.last_path == "distributed", eng.last_path
+        assert eng.last_kernel == ("bm25", mode == "wand")
     for r in hits[:3]:
         exp = eng.explain_doc(q, r["doc"])
         assert exp["found"] and exp["matched"], exp
@@ -73,7 +72,7 @@ def test_explain_doc_contributions_sum_to_hit_score(ex_setup, q, mode):
 
 
 def test_explain_doc_sum_on_distfq_wand_hits(ex_setup):
-    """The cogrouped distributed-fq WAND executor (wand_distfq) is explained
+    """The kernel fed distributed fq ids through the cogroup is explained
     with the same per-(field, atom) arithmetic: sum≡score on its hits, and
     the fq gate verdict is reported per doc."""
     eng, _ = ex_setup
@@ -82,8 +81,10 @@ def test_explain_doc_sum_on_distfq_wand_hits(ex_setup):
     try:
         q = Query("xp_distfq", "and", [["query"], ["index"]], k=10,
                   field_eq={"role": "user"})
-        hits = eng.search(q, mode="wand").collect()
-        assert eng.last_path == "wand_distfq"
+        df = eng.search(q, mode="wand")
+        assert eng.last_path == "distributed"
+        assert "FlatMapCoGroupsInPandas" in df._jdf.queryExecution().executedPlan().toString()
+        hits = df.collect()
         assert hits
         for r in hits[:3]:
             exp = eng.explain_doc(q, r["doc"])
@@ -160,7 +161,7 @@ def test_explain_reports_executed_path_and_parse(ex_setup):
     exp = eng.explain(q, mode="auto")
     # tiny corpus → the driver fast path must have run, and the report says so
     assert exp["path"] == eng.last_path
-    assert exp["path"] in ("driver_wand", "result_cache")
+    assert exp["path"] in ("driver", "result_cache")
     assert exp["kind"] == "and" and exp["routed_index"] == "standard"
     f = exp["fields"][0]
     assert f["admission"]["driver_eligible"] is True
@@ -169,12 +170,13 @@ def test_explain_reports_executed_path_and_parse(ex_setup):
     assert all(pt["df"] > 0 and pt["idf"] > 0 for pt in terms.values())
 
     exp2 = eng.explain(q, mode="exhaustive")
-    assert exp2["path"] == "exhaustive_distributed"
+    assert exp2["path"] == "distributed"
+    assert exp2["score_mode"] == "bm25" and exp2["prune"] is False
 
     # re-explaining a cached query still reports the real executor
     exp3 = eng.explain(q, mode="auto")
     assert exp3["result_cache_hit"] is True
-    assert exp3["path"] == "driver_wand"
+    assert exp3["path"] == "driver" and exp3["prune"] is True
 
 
 def test_explain_multifield_and_fq_sections(ex_setup):
@@ -263,15 +265,17 @@ def test_explain_json_serializable_without_fallback(ex_setup):
 
 
 def test_explain_fq_section_respects_filter_docs_routing(ex_setup):
-    """Review regression: with filter_docs present the engine never consults
-    the filterCache — the report must say so instead of fabricating a
-    resolved-ids count."""
-    eng, _ = ex_setup
+    """filter_docs is one more fq predicate (doc IN list): the filterCache
+    resolves it with the other predicates, so the report counts the
+    intersected ids and a small query stays driver-eligible."""
+    eng, pdf = ex_setup
     docs = [r["doc"] for r in eng.search(Query("xp_s", "term", [["query"]], k=5)).collect()]
     q = Query("xp_fd", "term", [["query"]], k=5, filter_docs=docs,
               field_eq={"role": "assistant"})
     exp = eng.explain(q)
-    assert "resolved_n_ids" not in exp["fq"]
-    assert "filterCache is not consulted" in exp["fq"]["note"]
-    assert exp["filter_docs"]["n"] == len(docs)
-    assert exp["fields"][0]["admission"]["driver_eligible"] is False
+    keys = pdf["conv_id"] + ":" + pdf["turn_idx"].astype(str)
+    n_assistant = int(((pdf["role"] == "assistant") & keys.isin(docs)).sum())
+    assert exp["fq"]["predicates"] == ["role:'assistant'", f"doc IN [{len(docs)} docs]"]
+    assert exp["fq"]["resolved_n_ids"] == n_assistant
+    assert exp["fields"][0]["admission"]["driver_eligible"] is True
+    assert exp["path"] in ("driver", "empty")

@@ -45,8 +45,6 @@ def _rows(df):
 @pytest.mark.parametrize("q", QUERIES, ids=[q.query_id for q in QUERIES])
 def test_pages_concatenate_to_oneshot(paging_engine, q, mode):
     eng = paging_engine
-    if mode == "exhaustive" and q.kind in ("wildcard",):
-        pytest.skip("multiterm has no exhaustive mode switch")
     full = _rows(eng.search(replace(q, k=10_000), mode=mode))
     assert len(full) > 12, "fixture query must have enough hits to page"
     page_k = 5

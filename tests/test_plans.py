@@ -54,11 +54,14 @@ def test_docs_scan_prunes_columns(spark, engine):
     assert rs and "text" not in rs[0], rs
 
 
-def test_idf_join_is_broadcast(spark, engine):
+def test_exhaustive_plan_is_one_segment_kernel(spark, engine):
+    """Exhaustive mode is the segment kernel with pruning off: one
+    per-segment pandas scorer and no per-doc score aggregation."""
     q = Query("p2", "and", [["spark"], ["braf"]], k=10)
     out = engine.search(q, mode="exhaustive")
-    plan = _plan(out)
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert not [ln for ln in plan.splitlines() if "HashAggregate" in ln and "doc_id" in ln], plan
 
 
 def test_as_of_prunes_seg_partitions(spark, engine):

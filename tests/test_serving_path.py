@@ -52,8 +52,15 @@ def test_head_term_stays_distributed(engine, monkeypatch):
     assert "FlatMapGroupsInPandas" in plan  # per-segment WAND scorer
 
 
-def test_filtered_query_stays_distributed(engine):
+def test_filtered_query_stays_distributed(engine, monkeypatch):
+    """filter_docs is an fq predicate like any other: it never bars the
+    driver path, and it never admits a query whose postings exceed the
+    bound."""
     q = Query("s3", "and", [["braf"], ["v600e"]], k=10, filter_docs=["conv_00000001:0"])
+    engine.search(q, mode="auto")
+    assert engine.last_path in ("driver", "empty")
+    engine._result_cache.clear()
+    monkeypatch.setattr(engine, "SMALL_QUERY_POSTINGS", 1)
     plan = _plan(engine.search(q, mode="auto"))
     assert "LocalTableScan" not in plan
 

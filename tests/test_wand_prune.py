@@ -57,8 +57,8 @@ def skewed_terms():
 
 def test_and_query_driver_group_bounds_decode(skewed_terms):
     s_prune, s_full = {}, {}
-    d1, sc1 = score_segment_topk(skewed_terms(), 2, 10, AVGDL, prune=True, stats=s_prune)
-    d2, sc2 = score_segment_topk(skewed_terms(), 2, 10, AVGDL, prune=False, stats=s_full)
+    d1, sc1 = score_segment_topk(skewed_terms(), 2, 10, prune=True, stats=s_prune)
+    d2, sc2 = score_segment_topk(skewed_terms(), 2, 10, prune=False, stats=s_full)
     assert np.array_equal(d1, d2)
     assert np.allclose(sc1, sc2)
     # the rare driver group bounds candidate ranges: only the frequent-term
@@ -74,11 +74,11 @@ def test_or_query_pruning(skewed_terms):
     for tb in tbs:
         tb.gid = 0
     s_prune, s_full = {}, {}
-    d1, sc1 = score_segment_topk(tbs, 1, 10, AVGDL, prune=True, stats=s_prune)
+    d1, sc1 = score_segment_topk(tbs, 1, 10, prune=True, stats=s_prune)
     tbs2 = skewed_terms()
     for tb in tbs2:
         tb.gid = 0
-    d2, sc2 = score_segment_topk(tbs2, 1, 10, AVGDL, prune=False, stats=s_full)
+    d2, sc2 = score_segment_topk(tbs2, 1, 10, prune=False, stats=s_full)
     assert np.array_equal(d1, d2)
     assert np.allclose(sc1, sc2)
     assert s_prune["ranges_scored"] < s_full["ranges_scored"]
@@ -95,9 +95,9 @@ def test_tie_boundary_canonical_docids():
     dls = np.full(n, 4, dtype=np.int64)  # identical docs -> identical scores
     for k in (1, 7, 13, 128, 300):
         tb = [_make_term_blocks("dup", 0, 1.3, docs, tfs, dls)]
-        d_p, s_p = score_segment_topk(tb, 1, k, AVGDL, prune=True)
+        d_p, s_p = score_segment_topk(tb, 1, k, prune=True)
         tb2 = [_make_term_blocks("dup", 0, 1.3, docs, tfs, dls)]
-        d_f, s_f = score_segment_topk(tb2, 1, k, AVGDL, prune=False)
+        d_f, s_f = score_segment_topk(tb2, 1, k, prune=False)
         assert np.array_equal(np.sort(d_p), np.arange(k)), f"k={k}: {np.sort(d_p)[:5]}"
         assert np.array_equal(np.sort(d_p), np.sort(d_f))
         assert np.allclose(np.sort(s_p), np.sort(s_f))
@@ -115,9 +115,9 @@ def test_tie_boundary_partial_ties():
     dls = np.concatenate([np.full(1000, 80), np.full(500, 60)]).astype(np.int64)
     k = 520  # 500 high scorers + first 20 of the tie plateau
     tb = [_make_term_blocks("t", 0, 2.0, docs, tfs, dls)]
-    d_p, _ = score_segment_topk(tb, 1, k, AVGDL, prune=True)
+    d_p, _ = score_segment_topk(tb, 1, k, prune=True)
     tb2 = [_make_term_blocks("t", 0, 2.0, docs, tfs, dls)]
-    d_f, _ = score_segment_topk(tb2, 1, k, AVGDL, prune=False)
+    d_f, _ = score_segment_topk(tb2, 1, k, prune=False)
     assert np.array_equal(np.sort(d_p), np.sort(d_f))
     plateau = np.sort(d_p)[np.sort(d_p) < 1000]
     assert np.array_equal(plateau, np.arange(plateau.size)), "smallest tie ids must win"
