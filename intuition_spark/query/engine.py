@@ -8,9 +8,11 @@ Every query shape is scored by ONE per-segment kernel (query/wand.py) over
 the block-compressed segmented postings (index/builder.py), in one of two
 placements:
 
-* driver      — cached pushdown block fetch (`_collect_blocks`) → kernel per
-  segment in-process → local hydration. Taken by ``mode="auto"`` when the
-  query's postings, fq ids and tombstones are all bounded.
+* driver      — block fetch through the driver-local segment reader
+  (`_LocalReader`, behind the `_collect_blocks` LRU cache) → kernel over
+  every segment in-process → local hydration; no Spark job. Taken by
+  ``mode="auto"`` when the query's postings, fq ids and tombstones are all
+  bounded.
 * distributed — ``groupBy("seg")[.cogroup(ids)].applyInPandas(kernel)`` →
   hydration join → TakeOrderedAndProject. Postings are doc-partitioned by
   segment, so the only query-time shuffle is the query's scanned blocks; the
@@ -23,21 +25,100 @@ identical top-k (tested). Tiebreak: score desc, conv_id asc, turn_idx asc.
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from intuition_spark.analysis.analyzers import analyze_text
 from intuition_spark.index.builder import SEG_SHIFT, IndexPaths
 from intuition_spark.query import wand
 from intuition_spark.query.ast import Query
 from intuition_spark.query.wand import bm25_idf
+
+
+# schema of the driver placement's and the empty result's hit frames
+HITS_SCHEMA = T.StructType(
+    [
+        T.StructField("doc", T.StringType()),
+        T.StructField("score", T.DoubleType()),
+        T.StructField("conv_id", T.StringType()),
+        T.StructField("turn_idx", T.IntegerType()),
+    ]
+)
+
+
+class _LocalReader:
+    """Driver-local reader of one seg-partitioned parquet table (``postings``
+    or ``docs``) — the in-process Lucene segment reader of a serving node.
+
+    Lists exactly the files Spark's reader lists (``seg=N/`` directories,
+    names starting with ``_`` or ``.`` ignored; an as-of view lists no
+    ``seg >= max_seg``), reads each footer once and keeps every row group's
+    ``key`` min/max. A lookup reads only the row groups whose range can hold
+    a wanted key — postings files are term-sorted per segment, and docs
+    row groups prune on doc_id (``seg << SEG_SHIFT | row``) to the doc's
+    segment — then keeps ``key IN keys`` rows in Arrow. Plain single-threaded
+    ``ParquetFile`` reads: no Spark job, and no Arrow scanner or I/O thread
+    pools on the driver. Rows and dtypes match ``toPandas()`` of the
+    equivalent Spark scan (``seg`` int32), up to row order."""
+
+    def __init__(self, root: str, key: str, max_seg: int | None = None):
+        self.key = key
+        # (seg, path, footer, per row group (min, max) of key, None = no stats)
+        self.files: list[tuple[int, str, pq.FileMetaData, list[tuple | None]]] = []
+        for d in sorted(os.listdir(root)):
+            if d.startswith(("_", ".")) or not d.startswith("seg="):
+                continue
+            seg = int(d[4:])
+            if max_seg is not None and seg >= max_seg:
+                continue
+            for f in sorted(os.listdir(os.path.join(root, d))):
+                if f.startswith(("_", ".")):
+                    continue
+                path = os.path.join(root, d, f)
+                md = pq.read_metadata(path)
+                j = md.schema.to_arrow_schema().get_field_index(key)
+                ranges = []
+                for i in range(md.num_row_groups):
+                    st = md.row_group(i).column(j).statistics
+                    ranges.append((st.min, st.max) if st is not None and st.has_min_max else None)
+                self.files.append((seg, path, md, ranges))
+
+    def read(self, keys: list, cols: list[str]) -> pd.DataFrame:
+        want = sorted(keys)
+        file_cols = [c for c in cols if c != "seg"]
+        tables = []
+        for seg, path, md, ranges in self.files:
+            rgs = [i for i, r in enumerate(ranges) if r is None or _any_in(want, *r)]
+            if rgs:
+                with pq.ParquetFile(path, metadata=md) as pf:
+                    t = pf.read_row_groups(rgs, columns=file_cols, use_threads=False)
+                t = t.filter(pc.is_in(t[self.key], value_set=pa.array(want, t[self.key].type)))
+                tables.append(t.append_column("seg", pa.array(np.full(t.num_rows, seg, np.int32))))
+        if not tables:
+            schema = self.files[0][2].schema.to_arrow_schema()
+            tables = [
+                pa.schema([schema.field(c) for c in file_cols]).empty_table()
+                .append_column("seg", pa.array([], pa.int32()))
+            ]
+        return pa.concat_tables(tables).select(cols).to_pandas()
+
+
+def _any_in(want: list, lo, hi) -> bool:
+    """Does the sorted list ``want`` hold a value in [lo, hi]?"""
+    i = bisect.bisect_left(want, lo)
+    return i < len(want) and want[i] <= hi
 
 
 @dataclass
@@ -56,11 +137,12 @@ class SearchEngine:
 
     Serving fast path: when a query's candidate postings are small
     (Σ df ≤ SMALL_QUERY_POSTINGS) and its fq ids and tombstones are bounded,
-    ``mode="auto"`` collects the pushdown-filtered blocks to the driver and
-    runs the segment kernel in-process — at most two tiny Spark scan jobs
-    instead of a shuffle + applyInPandas + join pipeline. This is what a
-    serving node does with a Lucene segment reader; the distributed placement
-    remains for head terms and is forced with ``mode="wand"``/``"exhaustive"``
+    ``mode="auto"`` reads the query's blocks (and, without a doc cache, its
+    hits' doc rows) with a driver-local parquet reader and runs the segment
+    kernel in-process — no Spark job once the engine is warm, instead of a
+    shuffle + applyInPandas + join pipeline. This is what a serving node
+    does with a Lucene segment reader; the distributed placement remains for
+    head terms and is forced with ``mode="wand"``/``"exhaustive"``
     (identity-tested).
     """
 
@@ -73,16 +155,17 @@ class SearchEngine:
     # scale with total occurrences, not document frequency
     SMALL_QUERY_POSITIONS = int(os.environ.get("INTUITION_SMALL_QUERY_POSITIONS", "2000000"))
     # doc metadata (doc_id → docID/conv/turn/ts) cached driver-side below this
-    # corpus size: hydration becomes a local merge, no per-query Spark job
+    # corpus size: hydration is an in-memory merge instead of a local point
+    # lookup of the hits' doc rows
     DOC_CACHE_MAX_DOCS = int(os.environ.get("INTUITION_DOC_CACHE_MAX_DOCS", "1000000"))
     # LRU postings-block cache (Solr filter-cache analogue): repeated query
-    # terms skip the postings scan job entirely. Bounded by total cached
+    # terms skip the postings read entirely. Bounded by total cached
     # postings count; segments are immutable so entries only invalidate on
     # refresh() after an incremental merge.
     BLOCK_CACHE_MAX_POSTINGS = int(os.environ.get("INTUITION_BLOCK_CACHE_POSTINGS", "4000000"))
     # LRU query-result cache (Solr queryResultCache analogue): a repeated
     # identical query returns its result frame without re-scoring. Driver-path
-    # results are materialized LocalTableScans, so re-collect is ~free;
+    # and empty results are LocalTableScans, so re-collect runs no Spark job;
     # distributed plans re-execute on collect (cache still skips planning).
     RESULT_CACHE_MAX = int(os.environ.get("INTUITION_RESULT_CACHE_MAX", "256"))
     # LRU fq cache (Solr filterCache analogue): each non-scoring metadata
@@ -138,6 +221,9 @@ class SearchEngine:
         self._fq_cache: OrderedDict[tuple, np.ndarray | None] = OrderedDict()
         self._postings_reader: dict[str, DataFrame] = {}
         self._docs_reader: dict[str, DataFrame] = {}
+        # driver-local readers, keyed (analyzer, "postings" | "docs")
+        self._local_readers: dict[tuple[str, str], _LocalReader] = {}
+        self._empty_frame: DataFrame | None = None
         # value None = oversize sentinel (set larger than TOMB_MAX_IDS)
         self._tomb_cache: dict[tuple, np.ndarray | None] = {}
         # debug surface (Solr debugQuery analogue, SolrClientTool.java:274):
@@ -223,9 +309,9 @@ class SearchEngine:
                 .toPandas()
                 .set_index("doc_id", drop=False)
             )
-        # serving warm-up: one 1-row scan primes the postings reader
-        # (file listing, schema, parquet footers) so the first real
-        # query doesn't pay cold-start planning cost
+        # one 1-row scan primes Spark's postings reader (file listing,
+        # schema, parquet footers) so the first distributed query doesn't
+        # pay cold-start planning cost; driver queries read via _LocalReader
         reader = self.spark.read.parquet(p.postings)
         self._postings_reader[a] = reader
         reader.select("term").limit(1).collect()
@@ -243,6 +329,7 @@ class SearchEngine:
         self._fq_cache.clear()
         self._postings_reader.clear()
         self._docs_reader.clear()
+        self._local_readers.clear()
         self._tomb_cache = {}
         self._needs_warm = set(self.paths)
 
@@ -276,6 +363,19 @@ class SearchEngine:
             # pruning — an as-of scan lists/reads nothing newer
             df = df.filter(F.col("seg") < snap["n_segments"])
         return df.filter(F.col("term").isin(terms))
+
+    def _local(self, a: str, table: str) -> _LocalReader:
+        """The driver-local reader of ``postings`` or ``docs`` for this
+        engine's view (an as-of view lists no newer segment)."""
+        r = self._local_readers.get((a, table))
+        if r is None:
+            snap = self._snap.get(a)
+            r = _LocalReader(
+                getattr(self.paths[a], table), "term" if table == "postings" else "doc_id",
+                snap["n_segments"] if snap is not None else None,
+            )
+            self._local_readers[(a, table)] = r
+        return r
 
     def _docs(self, a: str) -> DataFrame:
         df = self._docs_reader.get(a)
@@ -720,9 +820,8 @@ class SearchEngine:
         self, q: Query, spec: wand.KernelSpec, fetch: dict[str, list[str]],
         positional: dict[str, bool], included: np.ndarray | None, excluded: np.ndarray,
     ) -> DataFrame:
-        """Driver placement: cached block fetch → kernel per segment →
-        local hydration. Latency = postings point-scan + docs point-scan,
-        both skipped on cache hits."""
+        """Driver placement: cached block fetch → kernel over all segments →
+        local hydration, all in-process (`_LocalReader`; no Spark job)."""
         self.last_path, self.last_kernel = "driver", (spec.mode, spec.prune)
         blocks = pd.concat(
             [self._collect_blocks(f, ts, positional[f]).assign(fld=f) for f, ts in fetch.items()],
@@ -775,9 +874,11 @@ class SearchEngine:
 
     # ---- driver placement helpers (serving latency) ---------------------
     def _empty_hits(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [], "doc string, score double, conv_id string, turn_idx int"
-        )
+        # from an Arrow table, not a list: a LocalTableScan whose collect
+        # launches no Spark job (an empty list builds an RDD-backed frame)
+        if self._empty_frame is None:
+            self._empty_frame = self.spark.createDataFrame(to_arrow_schema(HITS_SCHEMA).empty_table())
+        return self._empty_frame
 
     def _exclude_terms(self, q: Query, a: str) -> list[str]:
         """Analyzed MUST_NOT terms (single-token atoms only — Lucene prohibits
@@ -827,9 +928,9 @@ class SearchEngine:
             self._block_cache_postings -= int(evicted["n"].sum()) if len(evicted) else 0
 
     def _collect_blocks(self, a: str, terms: list[str], with_positions: bool = False):
-        """Pushdown-filtered block fetch with a driver-side LRU term cache.
-        A cache entry without pos_bin is upgraded (refetched with positions)
-        when a positional query needs the same term."""
+        """Block fetch through the driver-local reader with an LRU term
+        cache. A cache entry without pos_bin is upgraded (refetched with
+        positions) when a positional query needs the same term."""
         missing = []
         for t in terms:
             hit = self._block_cache.get((a, t))
@@ -839,12 +940,12 @@ class SearchEngine:
                 self._block_cache.move_to_end((a, t))
         if missing:
             cols = self._BLOCK_COLS + (["pos_bin"] if with_positions else [])
-            fetched = self._blocks(a, missing).select(*cols).toPandas()
+            fetched = self._local(a, "postings").read(missing, cols)
             seen = set()
             for t, g in fetched.groupby("term", sort=False):
                 self._cache_put(a, str(t), g.reset_index(drop=True))
                 seen.add(str(t))
-            for t in missing:  # cache absent terms too: re-scans cost a job
+            for t in missing:  # cache absent terms too: re-reads cost I/O
                 if t not in seen:
                     # unconditional put: an absent-term placeholder cached
                     # without pos_bin must still upgrade to the positional
@@ -859,8 +960,9 @@ class SearchEngine:
         return out
 
     def _driver_hydrate(self, cand: pd.DataFrame, q: Query, order=("score",)) -> DataFrame:
-        """Fetch doc metadata for the (small) candidate set and produce the
-        canonical hit frame locally. One pushdown point-lookup scan job."""
+        """Fetch doc metadata for the (small) candidate set — from the doc
+        cache, else by a local point lookup — and produce the canonical hit
+        frame locally."""
         a = self._route(q)
         if cand.empty:
             return self._empty_hits()
@@ -868,12 +970,9 @@ class SearchEngine:
         if cached is not None:
             docs = cached.loc[cached.index.intersection(cand["doc_id"])].reset_index(drop=True)
         else:
-            ids = [int(d) for d in cand["doc_id"].tolist()]
-            docs = (
-                self._docs(a)
-                .filter(F.col("doc_id").isin(ids))
-                .select("doc_id", "doc", "conv_id", "turn_idx", "ts")
-                .toPandas()
+            docs = self._local(a, "docs").read(
+                [int(d) for d in cand["doc_id"].tolist()],
+                ["doc_id", "doc", "conv_id", "turn_idx", "ts"],
             )
         m = cand.merge(docs, on="doc_id")
         m = m.sort_values(
@@ -881,9 +980,7 @@ class SearchEngine:
             ascending=[False] * len(order) + [True, True], kind="mergesort",
         ).iloc[q.offset : q.offset + q.k]
         out = m[["doc", "score", "conv_id", "turn_idx"]]
-        return self.spark.createDataFrame(
-            out, schema="doc string, score double, conv_id string, turn_idx int"
-        )
+        return self.spark.createDataFrame(out, schema=HITS_SCHEMA)
 
     def _expand_cached(self, a: str, pattern: str, kind: str, fuzzy_max: int = 1) -> list[str] | None:
         """Dictionary expansion against the driver-side cache (no Spark job);

@@ -8,6 +8,7 @@ import os
 import pyarrow.parquet as pq
 import pytest
 
+from intuition_spark.analysis.analyzers import analyze_text
 from intuition_spark.corpus import generate_transcripts
 from intuition_spark.index.builder import IndexPaths, build_index
 from intuition_spark.index.incremental import compact, merge_delta
@@ -104,11 +105,72 @@ def test_block_cache_invalidated_by_refresh(spark, tmp_root):
     eng = SearchEngine(spark, {"standard": ix})
     q = Query("cc", "term", [["cachemarker"]], k=500)
     assert len(eng.search(q).collect()) == 0  # also caches the (empty) term
+    assert eng._block_cache and eng._local_readers
 
     merge_delta(spark, IndexPaths(ix), spark.read.parquet(delta_src))
     eng.refresh()
+    # the local reader's cached listing/footers go with the block cache: a
+    # stale listing would miss the delta's seg= directories
+    assert not eng._block_cache and not eng._local_readers
     hits = eng.search(q).collect()
     assert len(hits) == len(delta)
+    assert eng.last_path == "driver"
+
+    # compaction rewrites every file under new names: a term fetched before
+    # it serves from the rewritten files after refresh(), at oracle rank
+    assert eng._block_cache and eng._local_readers
+    compact(spark, IndexPaths(ix))
+    eng.refresh()
+    assert not eng._block_cache and not eng._local_readers
+    got = [(r["doc"], r["score"]) for r in eng.search(q).collect()]
+    assert eng.last_path == "driver"
+    oracle = build_oracle_index(pd.concat([base, delta]).to_dict("records"), "standard")
+    exp = oracle_search(oracle, q)
+    assert len(exp) == len(delta)
+    assert [d for d, _ in got] == [d for d, _ in exp]
+    for (_, gs), (_, es) in zip(got, exp):
+        assert abs(gs - es) < 1e-6
+
+
+def test_local_reader_matches_spark_scan(spark, tmp_root, assert_reader_matches_spark):
+    """The driver-local postings reader returns the Spark scan's blocks on a
+    fresh build, after merge_delta + refresh() (the delta's segments are
+    listed) and after compact + refresh() (every file rewritten), for
+    present and absent terms, with and without positions."""
+    import pandas as pd
+    import pyarrow as pa
+
+    tbl = generate_transcripts(400, max_tokens=30).to_pandas()
+    base = tbl.iloc[:300].copy()
+    upd = base.iloc[:20].copy()
+    upd["text"] = "readermarker " + upd["text"]
+    delta = pd.concat([tbl.iloc[300:], upd], ignore_index=True)
+    base_src = os.path.join(tmp_root, "lr_base.parquet")
+    delta_src = os.path.join(tmp_root, "lr_delta.parquet")
+    pq.write_table(pa.Table.from_pandas(base, preserve_index=False), base_src)
+    pq.write_table(pa.Table.from_pandas(delta, preserve_index=False), delta_src)
+
+    ix = os.path.join(tmp_root, "ix_lr")
+    build_index(spark, spark.read.parquet(base_src), ix, analyzer="standard", n_segments=2)
+    eng = SearchEngine(spark, {"standard": ix})
+    ((marker, _),) = analyze_text("readermarker", "standard")
+    terms = sorted(eng._dict_cache["standard"])[::40] + [marker, "zzzabsentterm"]
+
+    def check(n_segments):
+        for pos in (False, True):
+            got = assert_reader_matches_spark(eng, "standard", terms, pos)
+            assert len(got)
+        assert {f[0] for f in eng._local("standard", "postings").files} == set(range(n_segments))
+        return got
+
+    assert marker not in set(check(2)["term"])
+    res = merge_delta(spark, IndexPaths(ix), spark.read.parquet(delta_src))
+    eng.refresh()
+    got = check(2 + len(res["new_segs"]))
+    assert set(got.loc[got["term"] == marker, "seg"]) == set(res["new_segs"])
+    compact(spark, IndexPaths(ix))
+    eng.refresh()
+    check(eng.stats["standard"]["n_segments"])
 
 
 def test_fq_cache_respects_merge_without_refresh(spark, tmp_root):

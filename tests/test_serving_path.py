@@ -98,3 +98,80 @@ def test_refresh_is_lazy_and_cheap(engine):
     assert after == before
     # first search re-warmed the ROUTED analyzer lazily; others stay pending
     assert "standard" not in engine._needs_warm
+
+
+def _job_ids(spark, fn) -> list[int]:
+    """Spark job ids launched while ``fn`` runs (its own job group)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"zero_job_guard_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "q",
+    [
+        Query("zj_term", "term", [["inhibitor"]], k=10),
+        Query("zj_phrase", "phrase", [["braf v600e"]], k=10),
+        Query("zj_field", "term", [["braf"]], k=10, field_eq={"role": "user"}),
+    ],
+    ids=lambda q: q.query_id,
+)
+def test_warm_driver_query_launches_no_spark_job(spark, engine, q):
+    """Once the engine is warm, a driver-admitted query's search + collect
+    runs in-process: postings from the driver-local reader (block cache
+    cold here), hydration from the doc cache, a LocalTableScan result."""
+    for a in engine.paths:
+        engine._ensure_warm(a)
+    engine._block_cache.clear()
+    engine._block_cache_postings = 0
+    rows: list = []
+    jobs = _job_ids(spark, lambda: rows.extend(engine.search(q).collect()))
+    assert engine.last_path == "driver"
+    assert rows, f"{q.query_id}: vacuous (no hits)"
+    assert jobs == []
+
+
+@pytest.mark.parametrize(
+    "q",
+    [
+        Query("zj_absent", "term", [["zzzabsentterm"]], k=10),  # driver, no candidates
+        Query("zj_stop", "term", [["the"]], k=10),  # analyzes to nothing
+    ],
+    ids=lambda q: q.query_id,
+)
+def test_empty_result_launches_no_spark_job(spark, engine, q):
+    for a in engine.paths:
+        engine._ensure_warm(a)
+    got: dict = {}
+
+    def run():
+        got["df"] = engine.search(q)
+        got["rows"] = got["df"].collect()
+
+    jobs = _job_ids(spark, run)
+    assert engine.last_path in ("driver", "empty")
+    assert got["rows"] == [] and jobs == []
+    assert "LocalTableScan" in _plan(got["df"])
+
+
+def test_driver_query_without_doc_cache_launches_no_spark_job(spark, engine, monkeypatch):
+    """Past DOC_CACHE_MAX_DOCS hydration is a local point lookup of the
+    hits' doc rows (docs/seg=N, row groups pruned on doc_id), not a job."""
+    monkeypatch.setattr(SearchEngine, "DOC_CACHE_MAX_DOCS", 0)
+    ix = engine.paths["standard"].root
+    eng = SearchEngine(spark, {"standard": ix})  # warms in the constructor
+    assert "standard" not in eng._doc_cache
+    q = Query("zj_nodoc", "and", [["braf"], ["v600e"]], k=10)
+    want = [(r["doc"], r["score"]) for r in engine.search(q).collect()]
+    rows: list = []
+    jobs = _job_ids(spark, lambda: rows.extend(eng.search(q).collect()))
+    assert eng.last_path == "driver"
+    assert want and [(r["doc"], r["score"]) for r in rows] == want
+    assert jobs == []

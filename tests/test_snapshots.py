@@ -17,6 +17,7 @@ import os
 
 import pytest
 
+from intuition_spark.analysis.analyzers import analyze_text
 from intuition_spark.corpus import generate_transcripts
 from intuition_spark.index import snapshots
 from intuition_spark.index.builder import IndexPaths, build_index
@@ -99,6 +100,24 @@ def test_as_of_identical_to_pristine_build(spark, setup, mode):
         want = _rows(pristine.search(q, mode=mode))
         assert len(want) > 0, f"{q.query_id}: vacuous (term absent from corpus)"
         assert got == want, f"{q.query_id} mode={mode}"
+
+
+def test_as_of_local_reader_lists_no_newer_segment(spark, setup, assert_reader_matches_spark):
+    """An as-of view's driver-local reader lists only seg < n_segments of
+    its snapshot and returns the snapshot-filtered Spark scan's blocks; the
+    latest view's reader lists the delta's segments too. 'updated' lives
+    only in the delta, so it is an absent term as of snapshot 1."""
+    ix, _, _ = setup
+    n1 = snapshots.read_log(ix)[0]["n_segments"]
+    ((upd, _),) = analyze_text("updated", "standard")
+    terms = ["braf", "inhibitor", upd, "v600e", "zzzabsentterm"]
+    asof = SearchEngine(spark, ix, as_of=1)
+    for pos in (False, True):
+        got = assert_reader_matches_spark(asof, "standard", terms, pos)
+        assert len(got) and upd not in set(got["term"])
+    assert {f[0] for f in asof._local("standard", "postings").files} == set(range(n1))
+    got = assert_reader_matches_spark(SearchEngine(spark, ix), "standard", terms)
+    assert set(got.loc[got["term"] == upd, "seg"]) and got["seg"].max() >= n1
 
 
 def test_tombstones_cut_at_commit(spark, setup):
