@@ -14,9 +14,13 @@ placements:
   ``mode="auto"`` when the query's postings, fq ids and tombstones are all
   bounded.
 * distributed — ``groupBy("seg")[.cogroup(ids)].applyInPandas(kernel)`` →
-  hydration join → TakeOrderedAndProject. Postings are doc-partitioned by
-  segment, so the only query-time shuffle is the query's scanned blocks; the
-  global top-k is a merge of per-segment top-ks.
+  collect of the per-segment top-ks. Postings are doc-partitioned by
+  segment, so the only query-time shuffle is the query's scanned blocks.
+
+Both end alike: the scored rows are cut to offset+k plus boundary ties and
+hydrated locally (a coordinator merging shard top-ks, then fetching stored
+fields for the final page alone). When the kernel could emit more than
+SMALL_QUERY_POSTINGS rows, Spark first cuts them to offset+k.
 
 ``mode="wand"`` forces the distributed placement; ``mode="exhaustive"`` forces
 it with pruning off (the kernel scores every doc range). All must return
@@ -29,6 +33,7 @@ import bisect
 import json
 import os
 from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -47,7 +52,7 @@ from intuition_spark.query.ast import Query
 from intuition_spark.query.wand import bm25_idf
 
 
-# schema of the driver placement's and the empty result's hit frames
+# schema of every result frame
 HITS_SCHEMA = T.StructType(
     [
         T.StructField("doc", T.StringType()),
@@ -140,16 +145,18 @@ class SearchEngine:
     ``mode="auto"`` reads the query's blocks (and, without a doc cache, its
     hits' doc rows) with a driver-local parquet reader and runs the segment
     kernel in-process — no Spark job once the engine is warm, instead of a
-    shuffle + applyInPandas + join pipeline. This is what a serving node
-    does with a Lucene segment reader; the distributed placement remains for
-    head terms and is forced with ``mode="wand"``/``"exhaustive"``
-    (identity-tested).
+    shuffle + applyInPandas stage. This is what a serving node does with a
+    Lucene segment reader; the distributed placement remains for head terms
+    and is forced with ``mode="wand"``/``"exhaustive"`` (identity-tested).
+    Either way ``search()`` runs the query and returns a LocalTableScan of
+    the finished hits.
     """
 
     # dictionaries up to this many terms are cached driver-side: one parquet
     # read at init instead of one lookup job per query (serving-path latency)
     DICT_CACHE_MAX_TERMS = 2_000_000
-    # Σ df above which auto mode stays distributed (postings too big to pull)
+    # Σ df above which auto mode stays distributed (postings too big to pull);
+    # also the most scored rows a distributed query collects before Spark cuts
     SMALL_QUERY_POSTINGS = int(os.environ.get("INTUITION_SMALL_QUERY_POSTINGS", "2000000"))
     # Σ cf bound for the positional (phrase) driver route — pos_bin bytes
     # scale with total occurrences, not document frequency
@@ -164,9 +171,8 @@ class SearchEngine:
     # refresh() after an incremental merge.
     BLOCK_CACHE_MAX_POSTINGS = int(os.environ.get("INTUITION_BLOCK_CACHE_POSTINGS", "4000000"))
     # LRU query-result cache (Solr queryResultCache analogue): a repeated
-    # identical query returns its result frame without re-scoring. Driver-path
-    # and empty results are LocalTableScans, so re-collect runs no Spark job;
-    # distributed plans re-execute on collect (cache still skips planning).
+    # identical query returns its result frame without re-scoring. Results
+    # are LocalTableScans of finished hits, so a hit runs no Spark job.
     RESULT_CACHE_MAX = int(os.environ.get("INTUITION_RESULT_CACHE_MAX", "256"))
     # LRU fq cache (Solr filterCache analogue): each non-scoring metadata
     # predicate (field_eq entry; require_no_tool; ts_after; filter_docs)
@@ -227,16 +233,14 @@ class SearchEngine:
         # value None = oversize sentinel (set larger than TOMB_MAX_IDS)
         self._tomb_cache: dict[tuple, np.ndarray | None] = {}
         # debug surface (Solr debugQuery analogue, SolrClientTool.java:274):
-        # the terminal executor of the last search() stamps its name here, so
-        # explain() reports the EXECUTED path, never a re-derived guess.
-        # CONTRACT: shared mutable instance state, stamped at PLAN time —
-        # read it immediately after the search() call that produced it, from
-        # the same thread. Interleaved/concurrent searches on one engine, or
-        # reading after a later search, report the most recent plan's path
-        # (matching Solr, whose debug output is per-request; a per-request
-        # engine handle is the concurrency story, ADVICE r4). The path is one
-        # of result_cache / driver / distributed / empty; ``last_kernel`` is
-        # the (score mode, prune) the kernel ran with, None when none ran.
+        # the executor of the last search() stamps its name here, so explain()
+        # reports the EXECUTED path, never a re-derived guess. CONTRACT: shared
+        # mutable instance state — read it right after the search() that set
+        # it, from the same thread (Solr's debug output is per-request; a
+        # per-request engine handle is the concurrency story, ADVICE r4). The
+        # path is one of result_cache / driver / distributed / empty;
+        # ``last_kernel`` is the (score mode, prune) the kernel ran with, None
+        # when none ran.
         self.last_path: str | None = None
         self.last_kernel: tuple[str, bool] | None = None
         self._load_stats()
@@ -274,16 +278,15 @@ class SearchEngine:
             self._snap[a] = snap
 
     def _ensure_warm(self, a: str) -> None:
-        """Build the driver-side dictionary/doc caches + prime the postings
-        reader for one analyzer. Idempotent; deferred after refresh() so a
-        sharded server refreshing many shards doesn't pay all warm-ups
-        synchronously — each shard re-warms on its first query instead."""
+        """Build the driver-side dictionary/doc caches for one analyzer.
+        Idempotent; deferred after refresh() so a sharded server refreshing
+        many shards doesn't pay all warm-ups synchronously — each shard
+        re-warms on its first query instead."""
         if a not in self._needs_warm:
             return
         self._needs_warm.discard(a)
         if not self._cache_dictionary:
             return
-        p = self.paths[a]
         dic = self._dictionary_df(a).select("term", "df", "cf")
         persisted = self._snap.get(a) is not None
         if persisted:
@@ -309,12 +312,6 @@ class SearchEngine:
                 .toPandas()
                 .set_index("doc_id", drop=False)
             )
-        # one 1-row scan primes Spark's postings reader (file listing,
-        # schema, parquet footers) so the first distributed query doesn't
-        # pay cold-start planning cost; driver queries read via _LocalReader
-        reader = self.spark.read.parquet(p.postings)
-        self._postings_reader[a] = reader
-        reader.select("term").limit(1).collect()
 
     def refresh(self) -> None:
         """Invalidate caches after incremental merges. Cheap by design: only
@@ -410,10 +407,8 @@ class SearchEngine:
         """Tombstoned doc_ids visible to this engine's view, as a DataFrame
         (None when the index has no tombstone table). This is the distributed
         form — nothing collects to the driver."""
-        import os as _os
-
-        p = _os.path.join(self.paths[a].root, "tombstones")
-        if not _os.path.exists(p):
+        p = os.path.join(self.paths[a].root, "tombstones")
+        if not os.path.exists(p):
             return None
         snap = self._snap.get(a)
         if snap is not None:
@@ -438,21 +433,19 @@ class SearchEngine:
         (``_tomb_df``, cogrouped per segment with the posting blocks).
         Cached per (analyzer, dir mtime); compaction usually bounds the set
         well under the threshold."""
-        import os as _os
-
-        p = _os.path.join(self.paths[a].root, "tombstones")
-        if not _os.path.exists(p):
+        p = os.path.join(self.paths[a].root, "tombstones")
+        if not os.path.exists(p):
             return np.empty(0, dtype=np.int64)
         snap = self._snap.get(a)
-        mtime = _os.path.getmtime(p)
-        key = (a, mtime, snap["snapshot_id"] if snap else None)
+        key = (a, os.path.getmtime(p), snap["snapshot_id"] if snap else None)
         if key not in self._tomb_cache:
             pdf = self._tomb_df(a).limit(self.TOMB_MAX_IDS + 1).toPandas()
-            if len(pdf) > self.TOMB_MAX_IDS:
-                self._tomb_cache = {key: None}  # oversize sentinel
-            else:
-                ids = pdf["doc_id"].to_numpy()
-                self._tomb_cache = {key: np.sort(ids.astype(np.int64))}
+            # drop only this analyzer's stale entry (a multi-field query reads
+            # every scored field's tombstones per query); None = oversize
+            self._tomb_cache = {k: v for k, v in self._tomb_cache.items() if k[0] != a}
+            self._tomb_cache[key] = None if len(pdf) > self.TOMB_MAX_IDS else np.sort(
+                pdf["doc_id"].to_numpy().astype(np.int64)
+            )
         return self._tomb_cache[key]
 
     def _is_tombstoned(self, a: str, doc_id: int) -> bool:
@@ -545,29 +538,6 @@ class SearchEngine:
                 if toks:
                     atoms.append(_Atom(gid, toks, q.slop, atom))
         return atoms
-
-    def _finalize(self, scored: DataFrame, q: Query, a: str, order=("score",)) -> DataFrame:
-        """Hydration join + canonical top-k order of the distributed
-        placement: every ``order`` key descending (score; tf-sort's ts is the
-        reference's ``date desc``), then conv_id, turn_idx ascending. fq ids
-        and tombstones were already applied inside the kernel.
-
-        Mirrors lifecycle step 4 of `/query2` (hydrate by id then order,
-        `controller/ArticleController.java:465-473`).
-        """
-        docs = self._docs(a).select("doc_id", "doc", "conv_id", "turn_idx", "ts")
-        keys = [F.col(c).desc() for c in order]
-        out = (
-            scored.join(docs, "doc_id", "inner")
-            .orderBy(*keys, F.col("conv_id").asc(), F.col("turn_idx").asc())
-            .select("doc", "score", "conv_id", "turn_idx")
-        )
-        # deep paging (S7): rows offset..offset+k-1 of the canonical order —
-        # Catalyst plans sort+offset+limit as one TakeOrdered(offset+k) with
-        # a driver-side skip, so page depth never changes the shuffle shape
-        if q.offset:
-            out = out.offset(q.offset)
-        return out.limit(q.k)
 
     # ---- search --------------------------------------------------------
     @staticmethod
@@ -666,13 +636,7 @@ class SearchEngine:
 
     def search(self, q: Query, mode: str = "auto") -> DataFrame:
         if q.fields:
-            # a mistyped field name must not silently fall back to the
-            # first index
-            for f in q.fields:
-                if f not in self.paths:
-                    raise ValueError(
-                        f"unknown field index {f!r}; engine has {sorted(self.paths)}"
-                    )
+            self._validate_fields(q)
         a = self._route(q)
         self._ensure_warm(a)
         # fold in the index state of EVERY scored field, not just the routed
@@ -730,8 +694,6 @@ class SearchEngine:
         each segment's top-k (Solr fq semantics: filter, then rank). The mode
         is an optimization hint and never changes result semantics."""
         fields = dict(q.fields) if q.fields else {a: 1.0}
-        if q.fields:
-            self._validate_fields(q)
         has_fq, included = self._fq_fold(a, q)
         built = None
         if included is None or included.size:
@@ -828,51 +790,81 @@ class SearchEngine:
             ignore_index=True,
         )
         docs, scores = wand.score_segments(blocks, spec, included, excluded)
-        cand = pd.DataFrame({"doc_id": docs, "score": scores}).sort_values(
-            "score", ascending=False, kind="mergesort"
-        )
-        # cross-segment ties survive: the cutoff keeps every candidate at the
-        # boundary score for the canonical tiebreak in hydration
-        if len(cand) > spec.k:
-            cand = cand[cand["score"] >= float(cand["score"].iloc[spec.k - 1])]
-        return self._driver_hydrate(cand, q, self._order(spec))
+        return self._finish(pd.DataFrame({"doc_id": docs, "score": scores}), q, spec)
 
     def _run_distributed(
         self, q: Query, a: str, spec: wand.KernelSpec, fetch: dict[str, list[str]],
         positional: dict[str, bool], included: np.ndarray | None,
         excluded: np.ndarray | None, fq_df: DataFrame | None, tomb_dfs: list[DataFrame],
     ) -> DataFrame:
-        """Distributed placement: the query's scanned blocks (a ``fld``
+        """Distributed placement: `_kernel_stage` → collect → `_finish`. The
+        collect is bounded by construction: the kernel emits at most offset+k
+        rows per segment, or in tf mode every posting of the scored term (it
+        keeps all ties, which ts breaks); past SMALL_QUERY_POSTINGS, `_precut`."""
+        self.last_path, self.last_kernel = "distributed", (spec.mode, spec.prune)
+        scored = self._kernel_stage(spec, fetch, positional, included, excluded, fq_df, tomb_dfs)
+        if spec.mode == "tf":
+            bound = sum(self._dfs_for_terms(a, [t for _, t in spec.terms]).values())
+        else:
+            bound = spec.k * self.stats[a]["n_segments"]
+        if bound > self.SMALL_QUERY_POSTINGS:
+            scored = self._precut(scored, a, spec)
+        return self._finish(scored.toPandas(), q, spec)
+
+    def _kernel_stage(
+        self, spec: wand.KernelSpec, fetch: dict[str, list[str]], positional: dict[str, bool],
+        included: np.ndarray | None, excluded: np.ndarray | None,
+        fq_df: DataFrame | None, tomb_dfs: list[DataFrame],
+    ) -> DataFrame:
+        """The lazy kernel stage: the query's scanned blocks (a ``fld``
         column rides along — analyzed terms may contain any byte, so the
         field can't be smuggled into the term string) → groupBy(seg)
         [cogrouped with the oversize fq/tombstone id partitions] → kernel →
-        `_finalize`. Multi-field is valid because segments align across the
-        field indexes (_validate_fields), so per-segment block-max bounds
+        (doc_id, score). Multi-field is valid because segments align across
+        the field indexes (_validate_fields), so per-segment block-max bounds
         stay true upper bounds of the summed cross-field score."""
-        self.last_path, self.last_kernel = "distributed", (spec.mode, spec.prune)
-        blocks: DataFrame | None = None
-        for f, ts in fetch.items():
-            cols = self._BLOCK_COLS + (["pos_bin"] if positional[f] else [])
-            bl = self._blocks(f, ts).select(*cols).withColumn("fld", F.lit(f))
-            blocks = bl if blocks is None else blocks.unionByName(bl, allowMissingColumns=True)
+        blocks = reduce(lambda x, y: x.unionByName(y, allowMissingColumns=True), [
+            self._blocks(f, ts).select(*self._BLOCK_COLS, *(["pos_bin"] if positional[f] else []))
+            .withColumn("fld", F.lit(f))
+            for f, ts in fetch.items()
+        ])
         schema = "doc_id long, score double"
         if fq_df is None and not tomb_dfs:
             scorer = wand.segment_scorer(spec, included, excluded)
-            scored = blocks.groupBy("seg").applyInPandas(scorer, schema)
-        else:
-            scorer = wand.segment_scorer(
-                spec, included, excluded, cogroup=True, dist_fq=fq_df is not None
-            )
-            aux = self._aux_ids_df(fq_df, tomb_dfs)
-            scored = blocks.groupBy("seg").cogroup(aux.groupBy("seg")).applyInPandas(scorer, schema)
-        return self._finalize(scored, q, a, self._order(spec))
+            return blocks.groupBy("seg").applyInPandas(scorer, schema)
+        scorer = wand.segment_scorer(
+            spec, included, excluded, cogroup=True, dist_fq=fq_df is not None
+        )
+        aux = self._aux_ids_df(fq_df, tomb_dfs)
+        return blocks.groupBy("seg").cogroup(aux.groupBy("seg")).applyInPandas(scorer, schema)
+
+    def _precut(self, scored: DataFrame, a: str, spec: wand.KernelSpec) -> DataFrame:
+        """Cut the scored rows to the top offset+k in Spark: a join with the
+        docs' sort keys, then one TakeOrdered in the canonical order."""
+        docs = self._docs(a).select("doc_id", "ts", "conv_id", "turn_idx")
+        keys = [F.col(c).desc() for c in self._order(spec)]
+        return (
+            scored.join(docs, "doc_id")
+            .orderBy(*keys, F.col("conv_id").asc(), F.col("turn_idx").asc())
+            .limit(spec.k).select("doc_id", "score")
+        )
+
+    def _finish(self, cand: pd.DataFrame, q: Query, spec: wand.KernelSpec) -> DataFrame:
+        """The one ending of both placements: sort the scored rows and cut
+        them to the top offset+k. Every candidate tied at the boundary score
+        survives for the canonical tiebreak in `_driver_hydrate` (hydrate by
+        id then order, `controller/ArticleController.java:465-473`)."""
+        cand = cand.sort_values("score", ascending=False, kind="mergesort")
+        if len(cand) > spec.k:
+            cand = cand[cand["score"] >= float(cand["score"].iloc[spec.k - 1])]
+        return self._driver_hydrate(cand, q, self._order(spec))
 
     @staticmethod
     def _order(spec: wand.KernelSpec) -> tuple[str, ...]:
         # tf-sort: sort=termfreq(text,t) desc, date desc (SolrClientTool.java:147-151)
         return ("score", "ts") if spec.mode == "tf" else ("score",)
 
-    # ---- driver placement helpers (serving latency) ---------------------
+    # ---- driver-side helpers (serving latency) --------------------------
     def _empty_hits(self) -> DataFrame:
         # from an Arrow table, not a list: a LocalTableScan whose collect
         # launches no Spark job (an empty list builds an RDD-backed frame)
@@ -960,9 +952,9 @@ class SearchEngine:
         return out
 
     def _driver_hydrate(self, cand: pd.DataFrame, q: Query, order=("score",)) -> DataFrame:
-        """Fetch doc metadata for the (small) candidate set — from the doc
-        cache, else by a local point lookup — and produce the canonical hit
-        frame locally."""
+        """Fetch doc metadata for either placement's bounded candidate set —
+        from the doc cache, else by a local point lookup — and produce the
+        canonical hit frame locally."""
         a = self._route(q)
         if cand.empty:
             return self._empty_hits()
@@ -1012,29 +1004,16 @@ class SearchEngine:
         the distributed tombstone sides (kind=0) for the cogrouped kernel.
         fq rows come from the docs store with seg already a column; tombstone
         rows recover it from the id (doc_id = seg << SEG_SHIFT | row)."""
-        parts: list[DataFrame] = []
-        if fq_df is not None:
-            parts.append(
-                fq_df.select(
-                    F.col("seg").cast("int").alias("seg"),
-                    F.col("doc_id").cast("long").alias("doc_id"),
-                    F.lit(1).alias("kind"),
-                )
-            )
-        for tomb_df in tomb_dfs:
-            parts.append(
-                tomb_df.select(
-                    F.shiftright(F.col("doc_id"), SEG_SHIFT).cast("int").alias("seg"),
-                    F.col("doc_id").cast("long").alias("doc_id"),
-                    F.lit(0).alias("kind"),
-                )
-            )
-        aux = parts[0]
-        for p in parts[1:]:
-            aux = aux.unionByName(p)
-        return aux
+        sides = [(fq_df, F.col("seg"), 1)] if fq_df is not None else []
+        sides += [(t, F.shiftright(F.col("doc_id"), SEG_SHIFT), 0) for t in tomb_dfs]
+        return reduce(DataFrame.unionByName, [
+            df.select(seg.cast("int").alias("seg"), F.col("doc_id").cast("long").alias("doc_id"),
+                      F.lit(kind).alias("kind"))
+            for df, seg, kind in sides
+        ])
 
     def _validate_fields(self, q: Query) -> None:
+        # a mistyped field name must not silently fall back to the first index
         base = None
         for f in q.fields:
             if f not in self.paths:

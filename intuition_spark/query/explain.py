@@ -22,8 +22,7 @@ This module provides the same two surfaces over the engine:
   field (multi-field semantics: a doc excluded/deleted in any field is out,
   as in the kernel's exclude set).
 
-Both execute like Solr's debug mode does — explain() observes a real run
-(driver paths eagerly, distributed paths at plan time — see ``wall_s``);
+Both execute like Solr's debug mode does — explain() observes a real run;
 explain_doc() reuses the engine's own block cache, decode, and the kernel's
 sloppy-phrase matcher (`wand._phrase_seg_match`), so the numbers ARE the
 kernel's numbers.
@@ -58,17 +57,16 @@ _MULTITERM_KINDS = ("wildcard", "regex", "fuzzy")
 def explain(engine, q: Query, mode: str = "auto") -> dict:
     """Run ``q`` and report parse + routing + admission + fq debug info.
 
-    ``wall_s`` times the ``search()`` call itself: driver fast paths execute
-    eagerly inside it, distributed paths return lazy DataFrames so it
-    measures planning only (the ``path`` field tells you which you got).
+    ``wall_s`` times the ``search()`` call itself, which runs the query to
+    finished hits on either placement (the ``path`` field tells you which).
 
     COST NOTE (ADVICE r4): when the query is a result-cache hit, the report
     still shows the executor a COLD run takes — by re-running
-    ``_search_uncached`` (driver paths execute eagerly) and timing it as
-    ``cold_rederive_s``. Explaining a hot query therefore costs one full
-    cold execution; that is intentional (the debug surface answers "which
-    path WOULD this take", like Solr's debug on a queryResultCache hit),
-    but don't put explain() on a per-request hot path.
+    ``_search_uncached`` and timing it as ``cold_rederive_s``. Explaining a
+    hot query therefore costs one full cold execution; that is intentional
+    (the debug surface answers "which path WOULD this take", like Solr's
+    debug on a queryResultCache hit), but don't put explain() on a
+    per-request hot path.
     """
     a = engine._route(q)
     engine._ensure_warm(a)

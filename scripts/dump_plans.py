@@ -2,8 +2,9 @@
 
 Evidence that the plans are the ones we want: term-IN pushdown at the
 postings scan, column pruning, ONE per-segment kernel (FlatMapGroupsInPandas,
-or FlatMapCoGroupsInPandas when distributed ids ride along) per query, and
-TakeOrderedAndProject for top-k.
+or FlatMapCoGroupsInPandas when distributed ids ride along) per query, and no
+docs scan outside an oversize fq's side and the tf pre-cut's TakeOrdered. A
+search returns a LocalTableScan, so each shows its captured kernel stage.
 """
 
 from __future__ import annotations
@@ -24,6 +25,23 @@ def plan_of(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
 
+def capture(method: str) -> list:
+    """Frames ``SearchEngine.<method>`` builds from now on, in order."""
+    frames: list = []
+    build = getattr(SearchEngine, method)
+    setattr(SearchEngine, method, lambda self, *a: frames.append(build(self, *a)) or frames[-1])
+    return frames
+
+
+def stage_plan(eng: SearchEngine, stages: list, q: Query, mode: str, docs_scans: int = 0) -> str:
+    """Run ``q`` distributed; return its kernel stage's plan, which scans the
+    docs table ``docs_scans`` times."""
+    assert "LocalTableScan" in plan_of(eng.search(q, mode=mode)) and eng.last_path == "distributed"
+    stage = stages[-1]._jdf.queryExecution().sparkPlan().toString()
+    assert stage.count(eng.paths["standard"].docs + "]") == docs_scans, stage
+    return plan_of(stages[-1])
+
+
 def main() -> None:
     spark = get_spark("plans")
     ix_dir = "/tmp/intuition_spark_plans_ix"
@@ -35,6 +53,7 @@ def main() -> None:
         df = spark.read.parquet(transcripts_path(20000))
         build_index(spark, df, ix_ws, analyzer="ws", n_segments=8)
     eng = SearchEngine(spark, {"standard": ix_dir, "ws": ix_ws})
+    stages, cuts = capture("_kernel_stage"), capture("_precut")
 
     sections = []
     cases = [
@@ -42,22 +61,28 @@ def main() -> None:
         # exhaustive = the same kernel with pruning off: same plan shape
         ("Exhaustive scorer (OR-groups)", Query("p2", "or_groups", [["braf", "kras"], ["v600e", "g12c"]], k=10), "exhaustive"),
         ("Phrase (positional)", Query("p3", "phrase", [["braf v600e"]], k=10), "exhaustive"),
-        # force the distributed path: with mode="auto" small queries take the
-        # driver serving path whose "plan" is just a LocalTableScan of results
+        # mode="exhaustive" forces the distributed path, as auto would not
         ("tf-sort (termfreq ranking)", Query("p4", "tf_sort", [["spark"]], k=10), "exhaustive"),
         # fused multi-field WAND — check ONE Union of two pushdown scans
         # feeding ONE Exchange(seg) + FlatMapGroupsInPandas (no per-field
-        # shuffles), then the usual hydration join + TakeOrdered
+        # shuffles)
         ("Multi-field WAND (edismax qf, standard + ws)",
          Query("p5", "and", [["braf"], ["v600e"]], k=10,
                fields={"standard": 1.0, "ws": 0.5}), "wand"),
-        # r4: deep page — offset folds into the same TakeOrdered shape
+        # r4: deep page — the kernel keeps offset+k rows per segment
         ("Deep page (offset=100, k=10)",
          Query("p6", "term", [["spark"]], k=10, offset=100), "exhaustive"),
     ]
     for title, q, mode in cases:
-        out = eng.search(q, mode=mode)
-        sections.append(f"## {title}\n\n```\n{plan_of(out)}\n```\n")
+        sections.append(f"## {title}\n\n```\n{stage_plan(eng, stages, q, mode)}\n```\n")
+
+    # tf-sort keeps every boundary tie, so its kernel may emit df(term) rows;
+    # past SMALL_QUERY_POSTINGS check ONE docs join under one TakeOrdered
+    eng_tf = SearchEngine(spark, {"standard": ix_dir})
+    eng_tf.SMALL_QUERY_POSTINGS = 1
+    eng_tf.search(Query("p4c", "tf_sort", [["spark"]], k=10), mode="exhaustive")
+    assert len(cuts) == 1 and "TakeOrderedAndProject" in plan_of(cuts[0])
+    sections.append(f"## tf-sort pre-cut (Σdf over the bound)\n\n```\n{plan_of(cuts[0])}\n```\n")
 
     blocks = eng._blocks("standard", ["braf", "v600e"])
     sections.append(f"## Postings scan (term pushdown)\n\n```\n{plan_of(blocks)}\n```\n")
@@ -71,11 +96,10 @@ def main() -> None:
     eng_fq.FQ_MAX_IDS = 1  # force the distributed-fq route
     q_fq = Query("p7", "and", [["braf"], ["v600e"]], k=10,
                  field_eq={"role": "user"})
-    out = eng_fq.search(q_fq, mode="wand")
-    assert eng_fq.last_path == "distributed", eng_fq.last_path
+    plan = stage_plan(eng_fq, stages, q_fq, "wand", docs_scans=1)
     sections.append(
         "## WAND under oversize fq (distributed filterCache, cogrouped)"
-        f"\n\n```\n{plan_of(out)}\n```\n"
+        f"\n\n```\n{plan}\n```\n"
     )
 
     # r4: snapshot time travel — the as-of seg predicate must land in
@@ -111,12 +135,10 @@ def main() -> None:
     # nothing materializes on the driver
     eng_dt = SearchEngine(spark, ix_tt)
     eng_dt.TOMB_MAX_IDS = 1
-    out = eng_dt.search(Query("p8", "and", [["braf"], ["v600e"]], k=10),
-                        mode="wand")
-    assert eng_dt.last_path == "distributed", eng_dt.last_path
+    plan = stage_plan(eng_dt, stages, Query("p8", "and", [["braf"], ["v600e"]], k=10), "wand")
     sections.append(
         "## WAND under oversize tombstones (distributed exclusion, cogrouped)"
-        f"\n\n```\n{plan_of(out)}\n```\n"
+        f"\n\n```\n{plan}\n```\n"
     )
 
     # r2: plans of the three gate entries whose r1 shapes were scale-killers —
@@ -144,8 +166,9 @@ def main() -> None:
         "(8 segments). Things to check: `PushedFilters: [In(term, …)]` on the\n"
         "postings scan, `ReadSchema` without unused columns, one\n"
         "`FlatMapGroupsInPandas` (the segment kernel; `FlatMapCoGroupsInPandas`\n"
-        "when oversize fq ids or tombstones ride along) per query, and\n"
-        "`TakeOrderedAndProject` for top-k.\n\n"
+        "when oversize fq ids or tombstones ride along) per query, shown as the\n"
+        "kernel stage a search collects, and no docs scan outside the oversize\n"
+        "fq's side and the tf-sort pre-cut's `TakeOrderedAndProject`.\n\n"
     )
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
         f.write(header + "\n".join(sections))

@@ -44,3 +44,32 @@ def assert_reader_matches_spark():
         return got
 
     return check
+
+
+def _capture(monkeypatch, method: str) -> list:
+    """Every frame ``SearchEngine.<method>`` builds while the test runs."""
+    from intuition_spark.query.engine import SearchEngine
+
+    frames: list = []
+    build = getattr(SearchEngine, method)
+
+    def spy(self, *args, **kwargs):
+        frames.append(build(self, *args, **kwargs))
+        return frames[-1]
+
+    monkeypatch.setattr(SearchEngine, method, spy)
+    return frames
+
+
+@pytest.fixture
+def kernel_stages(monkeypatch):
+    """The distributed placement's lazy kernel stages, in order: their plans
+    are no longer part of the collected result's."""
+    return _capture(monkeypatch, "_kernel_stage")
+
+
+@pytest.fixture
+def precuts(monkeypatch):
+    """The Spark-side cuts of distributed queries whose kernel could emit
+    more rows than a direct collect admits, in order."""
+    return _capture(monkeypatch, "_precut")

@@ -65,10 +65,14 @@ def _rows(df):
             for r in df.collect()]
 
 
-def _cogrouped(df) -> bool:
-    """The kernel received distributed id partitions (oversize fq or
-    tombstones) through the cogroup."""
-    return "FlatMapCoGroupsInPandas" in df._jdf.queryExecution().executedPlan().toString()
+def _cogrouped(stages) -> bool:
+    """The last kernel stage received distributed id partitions (oversize fq
+    or tombstones) through the cogroup."""
+    return "FlatMapCoGroupsInPandas" in stages[-1]._jdf.queryExecution().executedPlan().toString()
+
+
+def _docs_files(df) -> set[str]:
+    return {f for f in df.inputFiles() if "/docs/" in f}
 
 
 # ---------------------------------------------------------------- fq path
@@ -88,45 +92,55 @@ QUERIES = [
 ]
 
 
-def test_oversize_fq_keeps_wand(spark, plain_ix):
+def test_oversize_fq_keeps_wand(spark, plain_ix, kernel_stages):
     ref, sml, rows = _fq_engines(spark, plain_ix)
     oracle = build_oracle_index(rows, "standard")
     for q in QUERIES:
         exp = oracle_search(oracle, q)
         got_ref = _rows(ref.search(q, mode="auto"))
         df = sml.search(q, mode="wand")
-        assert sml.last_path == "distributed" and _cogrouped(df), q.query_id
+        assert sml.last_path == "distributed" and _cogrouped(kernel_stages), q.query_id
         got_wand = _rows(df)
         got_ex = _rows(sml.search(q, mode="exhaustive"))
         assert got_wand == got_ex == got_ref, q.query_id
         assert [d for d, _, _, _ in got_wand] == [d for d, _ in exp], q.query_id
 
 
-def test_oversize_fq_auto_routes_distfq(spark, plain_ix):
+def test_oversize_fq_auto_routes_distfq(spark, plain_ix, kernel_stages):
     _, sml, _ = _fq_engines(spark, plain_ix)
     q = Query("dq_auto", "and", [["spark"], ["data"]], k=10,
               field_eq={"role": "user"})
-    df = sml.search(q, mode="auto")
-    assert sml.last_path == "distributed" and _cogrouped(df)
+    sml.search(q, mode="auto")
+    assert sml.last_path == "distributed" and _cogrouped(kernel_stages)
 
 
-def test_oversize_ts_range_fq(spark, plain_ix):
+def test_oversize_ts_range_fq(spark, plain_ix, kernel_stages):
     ref, sml, rows = _fq_engines(spark, plain_ix)
     mid_ts = sorted(r["ts"] for r in rows)[len(rows) // 2]
     q = Query("dq_ts", "term", [["spark"]], k=10, ts_after=mid_ts)
     df = sml.search(q, mode="wand")
-    assert sml.last_path == "distributed" and _cogrouped(df)
+    assert sml.last_path == "distributed" and _cogrouped(kernel_stages)
     got = _rows(df)
     assert got == _rows(ref.search(q, mode="auto"))
     assert got == _rows(sml.search(q, mode="exhaustive"))
 
 
-def test_distfq_plan_is_cogrouped_wand(spark, plain_ix):
+def test_distfq_plan_is_cogrouped_wand(spark, plain_ix, kernel_stages):
     _, sml, _ = _fq_engines(spark, plain_ix)
     q = Query("dq_plan", "term", [["spark"]], k=10, field_eq={"role": "user"})
-    df = sml.search(q, mode="wand")
+    sml.search(q, mode="wand")
     assert sml.last_path == "distributed"
-    assert _cogrouped(df)  # the kernel, fed the fq ids per segment
+    assert _cogrouped(kernel_stages)  # the kernel, fed the fq ids per segment
+    # only the predicate's side reads docs: no hydration join in the stage
+    pred = sml._fq_pred_df("standard", q)
+    assert _docs_files(kernel_stages[-1]) == _docs_files(pred) != set()
+
+    def docs_scans(df) -> int:
+        # the physical plan before AQE: an executed stage prints it twice
+        plan = df._jdf.queryExecution().sparkPlan().toString()
+        return plan.count(sml.paths["standard"].docs + "]")
+
+    assert docs_scans(kernel_stages[-1]) == docs_scans(pred) == 1
 
 
 def test_distfq_respects_paging(spark, plain_ix):
@@ -168,13 +182,14 @@ TOMB_QUERIES = [
 ]
 
 
-def test_oversize_tombstones_never_materialize(spark, tomb_ix):
+def test_oversize_tombstones_never_materialize(spark, tomb_ix, kernel_stages):
     ref, big = _tomb_engines(spark, tomb_ix)
     _, oracle = tomb_ix
     for q in TOMB_QUERIES:
         got_ref = _rows(ref.search(q, mode="auto"))
         df = big.search(q, mode="wand")
-        assert big.last_path == "distributed" and _cogrouped(df), q.query_id
+        assert big.last_path == "distributed" and _cogrouped(kernel_stages), q.query_id
+        assert not _docs_files(kernel_stages[-1]), q.query_id  # no docs join
         got_wand = _rows(df)
         got_ex = _rows(big.search(q, mode="exhaustive"))
         got_auto = _rows(big.search(q, mode="auto"))
@@ -189,11 +204,11 @@ def test_oversize_tombstones_never_materialize(spark, tomb_ix):
     assert ref.last_path in ("driver", "result_cache")
 
 
-def test_oversize_tombstones_auto_bars_driver(spark, tomb_ix):
+def test_oversize_tombstones_auto_bars_driver(spark, tomb_ix, kernel_stages):
     _, big = _tomb_engines(spark, tomb_ix)
     q = Query("dt_auto", "term", [["kinase"]], k=10)
-    df = big.search(q, mode="auto")
-    assert big.last_path == "distributed" and _cogrouped(df)
+    big.search(q, mode="auto")
+    assert big.last_path == "distributed" and _cogrouped(kernel_stages)
 
 
 def test_oversize_tombstones_tf_sort_and_multiterm(spark, tomb_ix):
@@ -205,13 +220,13 @@ def test_oversize_tombstones_tf_sort_and_multiterm(spark, tomb_ix):
     assert _rows(big.search(qw)) == _rows(ref.search(qw))
 
 
-def test_oversize_fq_and_tombstones_compose(spark, tomb_ix):
+def test_oversize_fq_and_tombstones_compose(spark, tomb_ix, kernel_stages):
     ref, big = _tomb_engines(spark, tomb_ix)
     big.FQ_MAX_IDS = 5
     q = Query("dt_both", "and", [["spark"], ["data"]], k=10,
               field_eq={"role": "user"})
     df = big.search(q, mode="wand")
-    assert big.last_path == "distributed" and _cogrouped(df)  # both ride
+    assert big.last_path == "distributed" and _cogrouped(kernel_stages)  # both ride
     got = _rows(df)
     assert got == _rows(ref.search(q, mode="auto"))
     assert got == _rows(big.search(q, mode="exhaustive"))
@@ -226,3 +241,19 @@ def test_deleted_docs_absent_in_oversize_regime(spark, tomb_ix):
     assert len(hits) > 0
     live = {r["doc"] for r in big.get_by_id([h["doc"] for h in hits]).collect()}
     assert {h["doc"] for h in hits} <= live
+
+
+def test_multifield_tombstones_stay_cached(spark, tomb_ix, monkeypatch):
+    """A multi-field query reads every scored field's tombstones: each
+    field keeps its own cache entry, so a repeat reads none again."""
+    ix_dir, _ = tomb_ix
+    eng = SearchEngine(spark, {"standard": ix_dir, "twin": ix_dir})
+    q = Query("dt_mf", "and", [["spark"], ["data"]], k=10,
+              fields={"standard": 1.0, "twin": 1.0})
+    first = _rows(eng.search(q))
+    reads: list = []
+    tomb_df = eng._tomb_df
+    monkeypatch.setattr(eng, "_tomb_df", lambda a: reads.append(a) or tomb_df(a))
+    eng._result_cache.clear()
+    assert _rows(eng.search(q)) == first and first
+    assert eng.last_path == "driver" and reads == []

@@ -88,3 +88,31 @@ def test_tie_plateau_rank_identity(tie_setup, q, monkeypatch):
         )
         for (gd, gs), (ed, es) in zip(got, exp):
             assert abs(gs - es) < 1e-6
+
+
+# the distributed ending's collect bound, at and just past it: a bm25 kernel
+# emits at most (offset+k)·n_segments rows, a tf kernel every posting of its
+# term (it keeps all boundary ties); past SMALL_QUERY_POSTINGS Spark pre-cuts
+TT_BOUND = Query("tt_bound", "term", [["alpha"]], k=10, offset=5)
+TT_TF = next(q for q in QUERIES if q.query_id == "tt_tf")  # ties span segments
+ENDINGS = [(TT_BOUND, 0), (TT_BOUND, 1), (TT_TF, 0), (TT_TF, 1)]
+
+
+@pytest.mark.parametrize(
+    "q, over", ENDINGS, ids=[f"{q.query_id}-{'precut' if o else 'direct'}" for q, o in ENDINGS]
+)
+def test_distributed_ending_bound(tie_setup, q, over, monkeypatch, precuts):
+    eng, oracle = tie_setup
+    if q.kind == "tf_sort":
+        bound = len(oracle.postings[q.groups[0][0]])
+    else:
+        bound = (q.offset + q.k) * eng.stats["standard"]["n_segments"]
+    monkeypatch.setattr(eng, "SMALL_QUERY_POSTINGS", bound - over)
+    exp = oracle_search(oracle, replace(q, k=q.offset + q.k, offset=0))[q.offset :]
+    for mode in ("wand", "exhaustive"):
+        eng._result_cache.clear()
+        precuts.clear()
+        got = [(r["doc"], r["score"]) for r in eng.search(q, mode=mode).collect()]
+        assert eng.last_path == "distributed" and len(precuts) == over, (mode, len(precuts))
+        assert [d for d, _ in got] == [d for d, _ in exp], f"{q.query_id} [{mode}]"
+        assert all(abs(gs - es) < 1e-6 for (_, gs), (_, es) in zip(got, exp))

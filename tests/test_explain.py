@@ -71,7 +71,7 @@ def test_explain_doc_contributions_sum_to_hit_score(ex_setup, q, mode):
         )
 
 
-def test_explain_doc_sum_on_distfq_wand_hits(ex_setup):
+def test_explain_doc_sum_on_distfq_wand_hits(ex_setup, kernel_stages):
     """The kernel fed distributed fq ids through the cogroup is explained
     with the same per-(field, atom) arithmetic: sum≡score on its hits, and
     the fq gate verdict is reported per doc."""
@@ -83,7 +83,8 @@ def test_explain_doc_sum_on_distfq_wand_hits(ex_setup):
                   field_eq={"role": "user"})
         df = eng.search(q, mode="wand")
         assert eng.last_path == "distributed"
-        assert "FlatMapCoGroupsInPandas" in df._jdf.queryExecution().executedPlan().toString()
+        stage = kernel_stages[-1]._jdf.queryExecution().sparkPlan().toString()
+        assert "FlatMapCoGroupsInPandas" in stage
         hits = df.collect()
         assert hits
         for r in hits[:3]:

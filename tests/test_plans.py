@@ -1,7 +1,9 @@
 """Physical-plan quality gates (SURVEY.md §4): filters must reach the parquet
-scan, top-k must lower to TakeOrderedAndProject, and the scan must prune to
-the columns actually read. These are assertions on .explain output, so a
-regression in plan shape fails CI even when results stay correct."""
+scan, a Spark-side top-k must lower to TakeOrderedAndProject, and the scan
+must prune to the columns actually read. These are assertions on .explain
+output, so a regression in plan shape fails CI even when results stay
+correct. Distributed results are collected LocalTableScans; their kernel's
+plan is read from the captured kernel stage (``kernel_stages``)."""
 
 import os
 
@@ -39,11 +41,19 @@ def test_term_filter_pushed_to_postings_scan(spark, engine):
     assert "In(term" in plan, plan
 
 
-def test_topk_uses_take_ordered(spark, engine):
+def test_topk_uses_take_ordered(spark, engine, kernel_stages, precuts, monkeypatch):
+    """The distributed placement collects its kernel stage, which reads no
+    docs file (no hydration join), and returns a LocalTableScan. Past the
+    collect bound Spark cuts the scored rows first, in one TakeOrdered."""
     q = Query("p1", "and", [["spark"], ["braf"]], k=10)
-    out = engine.search(q, mode="wand")
-    plan = _plan(out)
-    assert "TakeOrderedAndProject" in plan, plan
+    assert "LocalTableScan" in _plan(engine.search(q, mode="wand"))
+    files = kernel_stages[-1].inputFiles()
+    assert files and not [f for f in files if "/docs/" in f], files
+    assert precuts == []
+    monkeypatch.setattr(engine, "SMALL_QUERY_POSTINGS", 1)
+    engine._result_cache.clear()
+    assert "LocalTableScan" in _plan(engine.search(q, mode="wand"))
+    assert len(precuts) == 1 and "TakeOrderedAndProject" in _plan(precuts[0]), precuts
 
 
 def test_docs_scan_prunes_columns(spark, engine):
@@ -54,12 +64,12 @@ def test_docs_scan_prunes_columns(spark, engine):
     assert rs and "text" not in rs[0], rs
 
 
-def test_exhaustive_plan_is_one_segment_kernel(spark, engine):
+def test_exhaustive_plan_is_one_segment_kernel(spark, engine, kernel_stages):
     """Exhaustive mode is the segment kernel with pruning off: one
     per-segment pandas scorer and no per-doc score aggregation."""
     q = Query("p2", "and", [["spark"], ["braf"]], k=10)
-    out = engine.search(q, mode="exhaustive")
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    engine.search(q, mode="exhaustive")
+    plan = kernel_stages[-1]._jdf.queryExecution().sparkPlan().toString()
     assert plan.count("FlatMapGroupsInPandas") == 1, plan
     assert not [ln for ln in plan.splitlines() if "HashAggregate" in ln and "doc_id" in ln], plan
 

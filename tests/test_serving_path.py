@@ -1,7 +1,9 @@
 """Serving fast-path routing contract: auto mode runs small queries on the
-driver (plan = LocalTableScan of the finished top-k) and routes head-term /
-filtered queries to the distributed engine. Result identity between the paths
-is covered by test_engine_oracle; this pins the ROUTING."""
+driver and routes head-term / filtered queries to the distributed engine.
+Either way the result is a LocalTableScan of the finished top-k; the
+distributed kernel's plan is read from its captured kernel stage. Result
+identity between the paths is covered by test_engine_oracle; this pins the
+ROUTING."""
 
 from __future__ import annotations
 
@@ -11,6 +13,7 @@ import pytest
 
 from intuition_spark.corpus import generate_transcripts
 from intuition_spark.index.builder import build_index
+from intuition_spark.oracle.bm25_oracle import build_oracle_index, oracle_search
 from intuition_spark.query.ast import Query
 from intuition_spark.query.engine import SearchEngine
 
@@ -24,6 +27,14 @@ def engine(spark, tmp_root):
     ix = os.path.join(tmp_root, "serving_ix")
     build_index(spark, spark.read.parquet(src), ix, analyzer="standard", n_segments=4)
     return SearchEngine(spark, {"standard": ix, "ws": ix})
+
+
+@pytest.fixture(scope="module")
+def oracle(engine, tmp_root):
+    import pyarrow.parquet as pq
+
+    rows = pq.read_table(os.path.join(tmp_root, "serving_corpus.parquet")).to_pylist()
+    return build_oracle_index(rows, "standard")
 
 
 def _plan(df) -> str:
@@ -44,12 +55,13 @@ def test_small_query_runs_on_driver(engine):
     assert "LocalTableScan" in plan  # results computed in-process
 
 
-def test_head_term_stays_distributed(engine, monkeypatch):
+def test_head_term_stays_distributed(engine, monkeypatch, kernel_stages):
     monkeypatch.setattr(engine, "SMALL_QUERY_POSTINGS", 1)  # everything is "big"
     q = Query("s2", "and", [["braf"], ["v600e"]], k=10)
     plan = _plan(engine.search(q, mode="auto"))
-    assert "LocalTableScan" not in plan
-    assert "FlatMapGroupsInPandas" in plan  # per-segment WAND scorer
+    assert engine.last_path == "distributed"
+    assert "LocalTableScan" in plan  # the collected, hydrated top-k
+    assert "FlatMapGroupsInPandas" in _plan(kernel_stages[-1])  # per-segment WAND scorer
 
 
 def test_filtered_query_stays_distributed(engine, monkeypatch):
@@ -61,14 +73,16 @@ def test_filtered_query_stays_distributed(engine, monkeypatch):
     assert engine.last_path in ("driver", "empty")
     engine._result_cache.clear()
     monkeypatch.setattr(engine, "SMALL_QUERY_POSTINGS", 1)
-    plan = _plan(engine.search(q, mode="auto"))
-    assert "LocalTableScan" not in plan
+    engine.search(q, mode="auto")
+    assert engine.last_path == "distributed"
 
 
-def test_forced_modes_ignore_driver_path(engine):
+def test_forced_modes_ignore_driver_path(engine, kernel_stages):
     q = Query("s4", "and", [["braf"], ["v600e"]], k=10)
-    assert "LocalTableScan" not in _plan(engine.search(q, mode="wand"))
-    assert "LocalTableScan" not in _plan(engine.search(q, mode="exhaustive"))
+    for mode in ("wand", "exhaustive"):
+        assert "LocalTableScan" in _plan(engine.search(q, mode=mode))
+        assert engine.last_path == "distributed"
+    assert len(kernel_stages) == 2
 
 
 def test_multiterm_driver_expansion_matches_spark(engine):
@@ -80,7 +94,7 @@ def test_multiterm_driver_expansion_matches_spark(engine):
         assert sorted(cached) == sorted(scan), (kind, pat)
 
 
-def test_refresh_is_lazy_and_cheap(engine):
+def test_refresh_is_lazy_and_cheap(engine, oracle):
     """refresh() must return without re-running warm-up scans (the sharded
     server refreshes N shards; eager re-warm cost N× startup). The caches
     rebuild on the first query, and results stay correct."""
@@ -98,6 +112,13 @@ def test_refresh_is_lazy_and_cheap(engine):
     assert after == before
     # first search re-warmed the ROUTED analyzer lazily; others stay pending
     assert "standard" not in engine._needs_warm
+    # the driver query read postings locally: nothing built Spark's reader
+    assert not engine._postings_reader
+    got = [(r["doc"], r["score"]) for r in engine.search(q, mode="wand").collect()]
+    exp = oracle_search(oracle, q)
+    assert engine.last_path == "distributed" and engine._postings_reader
+    assert [d for d, _ in got] == [d for d, _ in exp]
+    assert all(abs(g - e) < 1e-6 for (_, g), (_, e) in zip(got, exp))
 
 
 def _job_ids(spark, fn) -> list[int]:
@@ -136,6 +157,17 @@ def test_warm_driver_query_launches_no_spark_job(spark, engine, q):
     assert engine.last_path == "driver"
     assert rows, f"{q.query_id}: vacuous (no hits)"
     assert jobs == []
+
+
+def test_cached_distributed_result_launches_no_spark_job(spark, engine):
+    """A result-cache hit of a distributed query holds its finished hits,
+    like any other: its search + collect runs nothing."""
+    q = Query("zj_wand", "and", [["braf"], ["v600e"]], k=10)
+    want = engine.search(q, mode="wand").collect()
+    rows: list = []
+    jobs = _job_ids(spark, lambda: rows.extend(engine.search(q, mode="wand").collect()))
+    assert engine.last_path == "result_cache"
+    assert want and rows == want and jobs == []
 
 
 @pytest.mark.parametrize(
