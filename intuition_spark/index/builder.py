@@ -392,7 +392,6 @@ def prepare_docs(
     serve ``field_eq`` predicates with array_contains semantics (the
     reference's multi-valued `authors` field, SolrServiceImpl.java:397-404).
     """
-    t0 = time.time()
     base_cols = ["conv_id", "turn_idx", "role", "tool", "ts", "text"]
     extra = [c for c in (extra_meta_cols or []) if c not in base_cols]
     df = transcripts.select(*base_cols, *extra).withColumn(
@@ -445,7 +444,6 @@ def prepare_docs(
         "k1": K1,
         "b": B,
         "layout_version": LAYOUT_VERSION,
-        "docs_wall_s": round(time.time() - t0, 3),
     }
     with open(paths.stats, "w") as f:
         json.dump(stats, f, indent=1)
@@ -554,31 +552,50 @@ def build_index(
     with_positions: bool = True,
     segs_per_job: int = 8,
     extra_meta_cols: list[str] | None = None,
+    resume: bool = False,
 ) -> IndexPaths:
-    """Full build: docs → postings → dictionary."""
-    paths = IndexPaths(out_dir)
-    os.makedirs(out_dir, exist_ok=True)
-    # in-place rebuild must really rebuild: the session may carry
-    # partitionOverwriteMode=dynamic (build_postings sets it), under which a
-    # plain overwrite only replaces MATCHING seg partitions — a rebuild with
-    # fewer segments would leave the old higher-seg directories alive and the
-    # latest view would serve a mix of two corpora
+    """Full build: docs → postings → dictionary, then a 'build' snapshot.
+
+    ``resume`` finishes an interrupted build in place: the docs stage runs
+    only if it never wrote ``stats.json``, and ``build_postings`` skips the
+    segments the manifest marks done. Each stage's wall seconds land in
+    ``stats.json`` under ``stage_s``.
+    """
     import shutil
 
-    for d in (paths.docs, paths.postings, paths.dictionary, paths.manifest):
-        shutil.rmtree(d, ignore_errors=True)
-    prepare_docs(
-        spark, transcripts, paths, analyzer=analyzer, n_segments=n_segments,
-        extra_meta_cols=extra_meta_cols,
-    )
-    build_postings(spark, paths, with_positions=with_positions, segs_per_job=segs_per_job)
+    paths = IndexPaths(out_dir)
+    os.makedirs(out_dir, exist_ok=True)
+    if not resume:
+        # in-place rebuild must really rebuild: the session may carry
+        # partitionOverwriteMode=dynamic (build_postings sets it), under which
+        # a plain overwrite only replaces MATCHING seg partitions — a rebuild
+        # with fewer segments would leave the old higher-seg directories
+        # alive and the latest view would serve a mix of two corpora
+        for d in (paths.docs, paths.postings, paths.dictionary, paths.manifest):
+            shutil.rmtree(d, ignore_errors=True)
+    stage_s = {}
+    t0 = time.time()
+    if not (resume and os.path.exists(paths.stats)):
+        prepare_docs(
+            spark, transcripts, paths, analyzer=analyzer, n_segments=n_segments,
+            extra_meta_cols=extra_meta_cols,
+        )
+    stage_s["docs"], t0 = round(time.time() - t0, 3), time.time()
+    build_postings(spark, paths, with_positions=with_positions,
+                   segs_per_job=segs_per_job, resume=resume)
+    stage_s["postings"], t0 = round(time.time() - t0, 3), time.time()
     build_dictionary(spark, paths)
+    stage_s["dictionary"] = round(time.time() - t0, 3)
+    with open(paths.stats) as f:
+        stats = json.load(f)
+    stats["stage_s"] = stage_s
+    with open(paths.stats, "w") as f:
+        json.dump(stats, f, indent=1)
     # in-place rebuild hygiene: a fresh build has no deletions, and the
     # snapshot commit below expires every prior entry (the overwrite destroyed
     # their segments) — stale tombstones would otherwise delete new docs
     shutil.rmtree(os.path.join(out_dir, "tombstones"), ignore_errors=True)
-    with open(paths.stats) as f:
-        snapshots.append_snapshot(out_dir, "build", json.load(f))
+    snapshots.append_snapshot(out_dir, "build", stats)
     return paths
 
 

@@ -8,8 +8,11 @@ Cluster usage (the north-rule deployment shape):
         --input s3://bucket/transcripts --output s3://bucket/indexes/main \
         --analyzer standard --segments 4096 --segs-per-job 256 [--resume]
 
-Locally it runs on local[N]. Emits one JSON line of per-stage throughput
-metrics (the lineage/metrics requirement of B9).
+Locally it runs on local[N]. The build is `build_index`, so a rebuild over an
+existing index drops its old segments and tombstones and commits a 'build'
+snapshot. Emits one JSON line of per-stage throughput metrics (the
+lineage/metrics requirement of B9), read from the stage record `build_index`
+writes into stats.json.
 """
 
 from __future__ import annotations
@@ -32,101 +35,34 @@ def main() -> None:
     ap.add_argument("--segs-per-job", type=int, default=16)
     ap.add_argument("--no-positions", action="store_true")
     ap.add_argument("--resume", action="store_true", help="skip segments marked done in manifest")
-    ap.add_argument(
-        "--warmup", action="store_true",
-        help="run a small untimed build first: executor registration, python"
-        " worker boot and JVM JIT are constant per job and read as fake"
-        " serial time on a minutes-long leg, while at the north rule's"
-        " 10^12-turn scale they are noise — the timed stages then measure"
-        " steady-state throughput, the only regime that exists at the"
-        " graded scale",
-    )
     args = ap.parse_args()
 
-    from intuition_spark.index.builder import (
-        IndexPaths,
-        build_dictionary,
-        build_postings,
-        prepare_docs,
-    )
+    from intuition_spark.index.builder import build_index
     from intuition_spark.session import get_spark
 
     spark = get_spark("build-index")
-    paths = IndexPaths(args.output)
-    os.makedirs(args.output, exist_ok=True)
-    metrics: dict = {"input": args.input, "output": args.output, "resume": args.resume}
-
-    # SCAN-SPLIT SIZING: a small corpus landed in one parquet file gives the
-    # default 128 MB split ~a dozen scan tasks — a 2-core node packs them
-    # densely while an 8-core node runs 2 ragged waves with idle cores, so
-    # the docs stage read a fake 0.55 scaling efficiency. Target ~6 scan
-    # tasks per core (wave granularity smooths stragglers), clamped to
-    # [8 MB, 128 MB]: at the north rule's 100 TB the quotient exceeds the
-    # clamp ceiling and this is a no-op (and real corpora arrive as many
-    # row-group-splittable files anyway) — the floor only matters for
-    # single-file small-scale runs like the scaling legs.
-    in_bytes = 0
-    if os.path.isdir(args.input):
-        for root, _dirs, names in os.walk(args.input):
-            in_bytes += sum(os.path.getsize(os.path.join(root, n)) for n in names)
-    elif os.path.exists(args.input):
-        in_bytes = os.path.getsize(args.input)
-
-    def _size_scan_splits() -> None:
-        # called AFTER the warmup build: defaultParallelism on a standalone
-        # master reflects only the executors registered at call time — read
-        # at session start it returned 2 on an 8-core cluster and the clamp
-        # degenerated to the 128 MB default
-        if in_bytes:
-            par = spark.sparkContext.defaultParallelism
-            mpb = min(128 << 20, max(8 << 20, in_bytes // (par * 6)))
-            spark.conf.set("spark.sql.files.maxPartitionBytes", str(mpb))
-            metrics["max_partition_bytes"] = int(mpb)
-            metrics["parallelism"] = int(par)
-
-    if args.warmup:
-        from intuition_spark.index.builder import build_index
-        import shutil
-
-        ncores = spark.sparkContext.defaultParallelism
-        warm_dir = args.output.rstrip("/") + "_warm"
-        shutil.rmtree(warm_dir, ignore_errors=True)
-        tw = time.time()
-        build_index(
-            spark,
-            spark.read.parquet(args.input).limit(20_000).repartition(ncores * 2),
-            warm_dir, analyzer=args.analyzer, n_segments=ncores * 2,
-            segs_per_job=ncores * 2,
-        )
-        shutil.rmtree(warm_dir, ignore_errors=True)
-        metrics["warmup_s"] = round(time.time() - tw, 2)
-
-    _size_scan_splits()
     t0 = time.time()
-    df = spark.read.parquet(args.input)
-    if args.resume and os.path.exists(paths.stats):
-        with open(paths.stats) as f:
-            metrics["n_turns"] = json.load(f)["N"]
-    else:
-        stats = prepare_docs(spark, df, paths, analyzer=args.analyzer, n_segments=args.segments)
-        metrics["n_turns"] = stats["N"]
-    metrics["docs_stage_s"] = round(time.time() - t0, 2)
-
-    t1 = time.time()
-    build_postings(
-        spark, paths,
-        with_positions=not args.no_positions,
-        segs_per_job=args.segs_per_job,
+    paths = build_index(
+        spark, spark.read.parquet(args.input), args.output,
+        analyzer=args.analyzer, n_segments=args.segments,
+        with_positions=not args.no_positions, segs_per_job=args.segs_per_job,
         resume=args.resume,
     )
-    metrics["postings_stage_s"] = round(time.time() - t1, 2)
-
-    t2 = time.time()
-    build_dictionary(spark, paths)
-    metrics["dictionary_stage_s"] = round(time.time() - t2, 2)
-    metrics["total_s"] = round(time.time() - t0, 2)
-    metrics["turns_per_sec"] = round(metrics["n_turns"] / metrics["total_s"], 1)
-    print(json.dumps(metrics))
+    total_s = round(time.time() - t0, 2)
+    with open(paths.stats) as f:
+        stats = json.load(f)
+    stage_s = stats["stage_s"]
+    print(json.dumps({
+        "input": args.input,
+        "output": args.output,
+        "resume": args.resume,
+        "n_turns": stats["N"],
+        "docs_stage_s": stage_s["docs"],
+        "postings_stage_s": stage_s["postings"],
+        "dictionary_stage_s": stage_s["dictionary"],
+        "total_s": total_s,
+        "turns_per_sec": round(stats["N"] / total_s, 1),
+    }))
     spark.stop()
 
 

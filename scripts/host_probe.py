@@ -1,13 +1,10 @@
-"""Constant-work-per-process host probe (BASELINE.md §2 methodology).
+"""Constant-work-per-process host probe: the host label of bench.py's line.
 
 Runs the same pure-Python loop in 1..32 concurrent processes and prints the
 mean per-process wall time at each width. On an unloaded, unthrottled box the
 times are flat; growth at width w means the VM delivers fewer than w
-effective cores at that moment. Scaling measurements are only meaningful when
-(a) the 1-proc time matches the box's historical quiet value and (b) the
-curve is flat through the widths being compared — run this immediately
-before/after `bench.py --scaling[-submit]` and record both readings next to
-the efficiency number.
+effective cores at that moment. bench.py records a reading before and after
+each run, so a throttled run is self-identifying.
 
 Usage: python scripts/host_probe.py [widths ...]   (default: 1 2 4 8 16 32)
 """
@@ -36,43 +33,12 @@ def probe(widths) -> dict:
     return out
 
 
-def disk_probe(path: str = "/tmp", mb: int = 64) -> float:
-    """Seconds to write+fsync+read `mb` MB at `path` — an I/O-side receipt.
-
-    The CPU probe above is blind to disk contention: the r5 scaling attempts
-    1-2 recorded pairs whose CPU probes were stable (0.38-0.42 s/proc) while
-    the legs left their pinned cores ~80% idle (cpu_per_core 0.16-0.26) and
-    ran the identical job 2x slower than a later same-CPU-probe window —
-    receipt-consistent with a co-tenant hammering the shared disk. Recorded
-    per scaling pair alongside the CPU probes so a reader can attribute a
-    slow pair; NOT part of the admission rule (the estimator stays as
-    pre-registered in r4)."""
-    import os
-
-    fp = os.path.join(path, f".disk_probe_{os.getpid()}")
-    buf = b"\xa5" * (1024 * 1024)
-    t0 = time.time()
-    fd = os.open(fp, os.O_WRONLY | os.O_CREAT | os.O_TRUNC, 0o600)
-    try:
-        for _ in range(mb):
-            os.write(fd, buf)
-        os.fsync(fd)
-    finally:
-        os.close(fd)
-    with open(fp, "rb") as f:
-        while f.read(8 * 1024 * 1024):
-            pass
-    os.unlink(fp)
-    return round(time.time() - t0, 3)
-
-
 def main() -> None:
     widths = [int(a) for a in sys.argv[1:]] or [1, 2, 4, 8, 16, 32]
     print(
         json.dumps(
             {
                 "per_proc_sec_by_width": probe(widths),
-                "disk_probe_s": disk_probe(),
                 "ts": time.time(),
             }
         )
