@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from intuition_spark.driver_gate import _BM25_CTES, B, K1, register
 from intuition_spark.index.builder import build_index
-from intuition_spark.query.ast import SLOPPY_WEIGHTED, Query
+from intuition_spark.query.ast import Query
 from intuition_spark.query.engine import SearchEngine
 
 _ENGINES: dict[str, SearchEngine] = {}
@@ -163,11 +163,9 @@ a AS (SELECT doc_id, pos FROM toks WHERE term = 'hash'),
 b AS (SELECT doc_id, pos FROM toks WHERE term = 'merge'),
 -- Lucene sloppy-freq: each 'hash' occurrence that completes within the window
 -- contributes 1/(1+distance); for a two-term phrase the nearest following
--- 'merge' at gap g has distance g-1, so the weight is 1/g. In uniform mode
--- (INTUITION_SLOPPY_FREQ=uniform) every match weighs 1 — the SQL below is
--- generated to match whichever mode is active, like the engine and oracle.
+-- 'merge' at gap g has distance g-1, so the weight is 1/g.
 ptf AS (
-  SELECT doc_id, sum({"1.0 / (mb - pos)" if SLOPPY_WEIGHTED else "1.0"}) AS tf FROM (
+  SELECT doc_id, sum(1.0 / (mb - pos)) AS tf FROM (
     SELECT a.doc_id, a.pos, min(b.pos) AS mb
     FROM a JOIN b ON b.doc_id = a.doc_id AND b.pos > a.pos AND b.pos <= a.pos + 6
     GROUP BY a.doc_id, a.pos)

@@ -118,9 +118,7 @@ class IndexPaths:
         return os.path.join(self.root, "stats.json")
 
 
-def _make_segment_indexer(
-    analyzer: str, with_positions: bool, chunk_docs: int | None = None
-):
+def _make_segment_indexer(analyzer: str, chunk_docs: int | None = None):
     """mapInArrow fn: raw docs → encoded posting blocks, fused and shuffle-free.
 
     One Arrow round-trip per task: text goes in, compressed blocks come out as
@@ -188,7 +186,7 @@ def _make_segment_indexer(
             doc_s[starts],
             tf,
             dl_rep[order][starts],
-            pos_s if with_positions else None,
+            pos_s,
         )
 
     def _index_one_seg(seg: int, doc_ids: np.ndarray, texts: list) -> "pa.RecordBatch | None":
@@ -213,9 +211,7 @@ def _make_segment_indexer(
             return None
         if len(parts) == 1:
             codes, uniq, row_doc, tf, row_dl, pos_s = parts[0]
-            return _encode_sorted_arrow(
-                seg, uniq[codes], row_doc, tf, row_dl, pos_s, with_positions
-            )
+            return _encode_sorted_arrow(seg, uniq[codes], row_doc, tf, row_dl, pos_s)
         # vocab merge: factorize over the chunks' (already deduped) term sets
         # — a few 100k objects, not a few million tokens
         gcodes_cat, guniq = pd.factorize(
@@ -231,28 +227,24 @@ def _make_segment_indexer(
         # (term, doc) is unique across chunks (chunk doc ranges are disjoint),
         # so this reproduces the whole-segment row order exactly
         order = np.lexsort((doc_all, code_all))
-        pos_sorted = None
-        if with_positions:
-            # gather the variable-length per-row position runs into new order
-            pos_cat = np.concatenate([p[5] for p in parts])
-            run_starts = np.concatenate(([0], np.cumsum(tf_all)))[:-1]
-            lens_new = tf_all[order]
-            out_off = np.concatenate(([0], np.cumsum(lens_new)))
-            total = int(out_off[-1])
-            idx = (
-                np.arange(total, dtype=np.int64)
-                - np.repeat(out_off[:-1], lens_new)
-                + np.repeat(run_starts[order], lens_new)
-            )
-            pos_sorted = pos_cat[idx]
+        # gather the variable-length per-row position runs into new order
+        pos_cat = np.concatenate([p[5] for p in parts])
+        run_starts = np.concatenate(([0], np.cumsum(tf_all)))[:-1]
+        lens_new = tf_all[order]
+        out_off = np.concatenate(([0], np.cumsum(lens_new)))
+        total = int(out_off[-1])
+        idx = (
+            np.arange(total, dtype=np.int64)
+            - np.repeat(out_off[:-1], lens_new)
+            + np.repeat(run_starts[order], lens_new)
+        )
         return _encode_sorted_arrow(
             seg,
             np.asarray(guniq, dtype=object)[code_all[order]],
             doc_all[order],
             tf_all[order],
             dl_all[order],
-            pos_sorted,
-            with_positions,
+            pos_cat[idx],
         )
 
     def index_partition(batches):
@@ -293,8 +285,7 @@ def _encode_sorted_arrow(
     doc: np.ndarray,
     tf: np.ndarray,
     dl: np.ndarray,
-    pos_flat: np.ndarray | None,
-    with_positions: bool,
+    pos_flat: np.ndarray,
 ):
     """Vectorized block encoder over (term, doc_id)-sorted posting arrays:
     per-value varint bytes are computed once for the whole segment, and block
@@ -327,15 +318,14 @@ def _encode_sorted_arrow(
     tfs_off = np.concatenate(([0], np.cumsum(tfs_len)))
     dls_off = np.concatenate(([0], np.cumsum(dls_len)))
 
-    if with_positions:
-        flat = np.ascontiguousarray(pos_flat, dtype=np.int64)  # row-ordered
-        val_off = np.concatenate(([0], np.cumsum(tf)))  # value range per row
-        pdeltas = flat.copy()
-        if flat.size:
-            pdeltas[1:] = flat[1:] - flat[:-1]
-            pdeltas[val_off[:-1]] = flat[val_off[:-1]]  # absolute at doc starts
-        pos_buf, pos_len = codec.varint_encode_with_lengths(pdeltas.astype(np.uint64))
-        pos_byte_off = np.concatenate(([0], np.cumsum(pos_len)))
+    flat = np.ascontiguousarray(pos_flat, dtype=np.int64)  # row-ordered
+    val_off = np.concatenate(([0], np.cumsum(tf)))  # value range per row
+    pdeltas = flat.copy()
+    if flat.size:
+        pdeltas[1:] = flat[1:] - flat[:-1]
+        pdeltas[val_off[:-1]] = flat[val_off[:-1]]  # absolute at doc starts
+    pos_buf, pos_len = codec.varint_encode_with_lengths(pdeltas.astype(np.uint64))
+    pos_byte_off = np.concatenate(([0], np.cumsum(pos_len)))
 
     tf_sum = np.add.reduceat(tf, bstarts)
     max_tf = np.maximum.reduceat(tf, bstarts)
@@ -359,11 +349,7 @@ def _encode_sorted_arrow(
         _arrow_binary(nb, docs_bo, docs_buf),
         _arrow_binary(nb, tfs_bo, tfs_buf),
         _arrow_binary(nb, dls_bo, dls_buf),
-        (
-            _arrow_binary(nb, np.append(pos_byte_off[val_off[bstarts]], pos_byte_off[-1]), pos_buf)
-            if with_positions
-            else pa.nulls(nb, pa.binary())
-        ),
+        _arrow_binary(nb, np.append(pos_byte_off[val_off[bstarts]], pos_byte_off[-1]), pos_buf),
         pa.array(np.full(nb, seg, dtype=np.int32), type=pa.int32()),
     ]
     names = [
@@ -460,7 +446,6 @@ def _manifest_done_segs(spark: SparkSession, paths: IndexPaths) -> set[int]:
 def build_postings(
     spark: SparkSession,
     paths: IndexPaths,
-    with_positions: bool = True,
     segs_per_job: int = 8,
     resume: bool = False,
     fail_after_segs: int | None = None,
@@ -501,7 +486,7 @@ def build_postings(
         t0 = time.time()
         batch_docs = docs.filter(F.col("seg").isin(batch)).select("seg", "doc_id", "text")
         blocks = batch_docs.mapInArrow(
-            _make_segment_indexer(analyzer, with_positions), BLOCK_SCHEMA
+            _make_segment_indexer(analyzer), BLOCK_SCHEMA
         )
         # no shuffle anywhere: the docs scan is already seg-partitioned on
         # disk, the indexer emits blocks sorted by (term, blk) per segment,
@@ -549,7 +534,6 @@ def build_index(
     out_dir: str,
     analyzer: str = "standard",
     n_segments: int = 8,
-    with_positions: bool = True,
     segs_per_job: int = 8,
     extra_meta_cols: list[str] | None = None,
     resume: bool = False,
@@ -581,8 +565,7 @@ def build_index(
             extra_meta_cols=extra_meta_cols,
         )
     stage_s["docs"], t0 = round(time.time() - t0, 3), time.time()
-    build_postings(spark, paths, with_positions=with_positions,
-                   segs_per_job=segs_per_job, resume=resume)
+    build_postings(spark, paths, segs_per_job=segs_per_job, resume=resume)
     stage_s["postings"], t0 = round(time.time() - t0, 3), time.time()
     build_dictionary(spark, paths)
     stage_s["dictionary"] = round(time.time() - t0, 3)

@@ -32,6 +32,7 @@ from intuition_spark.index import snapshots
 from intuition_spark.index.builder import (
     IndexPaths,
     build_dictionary,
+    build_index,
     build_postings,
     prepare_docs,
 )
@@ -213,25 +214,24 @@ def compact(
     # full rewrite into a fresh layout, then swap
     import shutil
 
-    tmp = IndexPaths(paths.root + "_compacting")
-    shutil.rmtree(tmp.root, ignore_errors=True)
-    os.makedirs(tmp.root)
-    prepare_docs(
+    tmp = paths.root + "_compacting"
+    shutil.rmtree(tmp, ignore_errors=True)
+    build_index(
         spark, live, tmp, analyzer=stats["analyzer"],
         n_segments=n_segments if n_segments is not None else stats["n_segments"],
-        extra_meta_cols=extra_cols,
+        segs_per_job=segs_per_job, extra_meta_cols=extra_cols,
     )
-    build_postings(spark, tmp, segs_per_job=segs_per_job)
-    build_dictionary(spark, tmp)
-    # carry the snapshot log through the swap, then commit a 'replace'
-    # snapshot: the rewrite destroyed every ancestor's data files, so all
-    # prior snapshots expire (Iceberg: rewrite_data_files + expire_snapshots)
+    # carry the snapshot log through the swap in place of the scratch
+    # build's own, then commit a 'replace' snapshot: the rewrite destroyed
+    # every ancestor's data files, so all prior snapshots expire (Iceberg:
+    # rewrite_data_files + expire_snapshots)
+    os.remove(snapshots.log_path(tmp))
     if os.path.exists(snapshots.log_path(paths.root)):
-        shutil.copy2(snapshots.log_path(paths.root), snapshots.log_path(tmp.root))
+        shutil.copy2(snapshots.log_path(paths.root), snapshots.log_path(tmp))
     old = paths.root + "_old"
     shutil.rmtree(old, ignore_errors=True)
     os.rename(paths.root, old)
-    os.rename(tmp.root, paths.root)
+    os.rename(tmp, paths.root)
     shutil.rmtree(old, ignore_errors=True)
     with open(paths.stats) as f:
         snapshots.append_snapshot(paths.root, "replace", json.load(f))

@@ -18,7 +18,7 @@ import re
 from dataclasses import dataclass, field
 
 from intuition_spark.analysis.analyzers import analyze_text
-from intuition_spark.query.ast import SLOPPY_WEIGHTED, Query, doc_key
+from intuition_spark.query.ast import Query, doc_key
 
 K1 = 1.2
 B = 0.75
@@ -82,17 +82,12 @@ def _candidate_filter(ix: OracleIndex, q: Query, doc: str) -> bool:
     return True
 
 
-def _phrase_match_count(
-    positions: list[list[int]], slop: int, weighted: bool | None = None
-) -> float:
+def _phrase_match_count(positions: list[list[int]], slop: int) -> float:
     """Sloppy-freq of an n-term phrase. slop=0: consecutive positions
     (respecting the token-stream gaps). slop>0: a window where each
     subsequent term sits within [prev+1, first+slop+i]. Each match weighs
-    1/(1+distance) — Lucene SloppyPhraseScorer parity — unless
-    INTUITION_SLOPPY_FREQ=uniform (see query/ast.py); exact matches always
-    weigh 1."""
-    if weighted is None:
-        weighted = SLOPPY_WEIGHTED
+    1/(1+distance) — Lucene SloppyPhraseScorer parity; exact matches weigh
+    1."""
     first = positions[0]
     tf = 0.0
     for p0 in first:
@@ -112,7 +107,7 @@ def _phrase_match_count(
                 prev = min(nxt)
         if ok:
             dist = (prev - p0) - (len(positions) - 1)
-            tf += 1.0 / (1.0 + dist) if weighted else 1.0
+            tf += 1.0 / (1.0 + dist)
     return tf
 
 

@@ -20,9 +20,6 @@ Semantics (shared verbatim by the pure-Python oracle and the Spark engine):
   twice, like Lucene PhraseWeight); tf = Σ over matches of 1/(1+distance)
   where distance is the matched window's spread beyond an exact phrase —
   Lucene SloppyPhraseScorer's sloppyFreq. Exact matches weigh 1.
-  ``INTUITION_SLOPPY_FREQ=uniform`` restores the simplified
-  every-match-weighs-1 mode; engine and oracle both read the flag, so every
-  rank-identity test shares whichever mode is active.
 * ``wildcard`` / ``regex`` / ``fuzzy`` atoms expand against the dictionary of
   the ``ws``-analyzed field (the reference flips default field to ``text_ws``
   for wildcards, `SolrServiceImpl.java:434`) and score constant 1.0 per doc
@@ -39,7 +36,6 @@ key ascending with numeric turn index.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 from datetime import datetime
 
@@ -60,11 +56,6 @@ EXTRA_FIELD_EQ_COLS: set[str] = set()
 def register_field_col(name: str) -> None:
     """Allow ``field_eq`` predicates on an extra stored metadata column."""
     EXTRA_FIELD_EQ_COLS.add(name)
-
-# Lucene SloppyPhraseScorer parity (1/(1+distance) sloppy-freq) is the
-# default; "uniform" restores the round-1 simplification. Shared by
-# query/engine.py and oracle/bm25_oracle.py so both sides always agree.
-SLOPPY_WEIGHTED = os.environ.get("INTUITION_SLOPPY_FREQ", "lucene") != "uniform"
 
 
 @dataclass

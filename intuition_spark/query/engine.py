@@ -10,17 +10,20 @@ placements:
 
 * driver      — block fetch through the driver-local segment reader
   (`_LocalReader`, behind the `_collect_blocks` LRU cache) → kernel over
-  every segment in-process → local hydration; no Spark job. Taken by
-  ``mode="auto"`` when the query's postings, fq ids and tombstones are all
-  bounded.
+  every segment in-process → hydration by the local docs reader; no Spark
+  job. Taken by ``mode="auto"`` when the query's postings, fq ids and
+  tombstones are all bounded.
 * distributed — ``groupBy("seg")[.cogroup(ids)].applyInPandas(kernel)`` →
   collect of the per-segment top-ks. Postings are doc-partitioned by
   segment, so the only query-time shuffle is the query's scanned blocks.
 
 Both end alike: the scored rows are cut to offset+k plus boundary ties and
-hydrated locally (a coordinator merging shard top-ks, then fetching stored
-fields for the final page alone). When the kernel could emit more than
-SMALL_QUERY_POSTINGS rows, Spark first cuts them to offset+k.
+hydrated by a local point lookup of their docs rows (a coordinator merging
+shard top-ks, then fetching stored fields for the final page alone). When
+the kernel could emit more than SMALL_QUERY_POSTINGS rows, Spark first cuts
+them to offset+k. The driver keeps no copy of the docs table: hydration,
+fq resolution and ``explain_doc`` read ``docs/seg=N`` through
+`_LocalReader`.
 
 ``mode="wand"`` forces the distributed placement; ``mode="exhaustive"`` forces
 it with pruning off (the kernel scores every doc range). All must return
@@ -62,6 +65,9 @@ HITS_SCHEMA = T.StructType(
     ]
 )
 
+# the docs column an fq pair reads (a field_eq pair reads its own column)
+_FQ_COLS = {"__ts_after__": "ts", "__doc_in__": "doc"}
+
 
 class _LocalReader:
     """Driver-local reader of one seg-partitioned parquet table (``postings``
@@ -93,12 +99,7 @@ class _LocalReader:
                     continue
                 path = os.path.join(root, d, f)
                 md = pq.read_metadata(path)
-                j = md.schema.to_arrow_schema().get_field_index(key)
-                ranges = []
-                for i in range(md.num_row_groups):
-                    st = md.row_group(i).column(j).statistics
-                    ranges.append((st.min, st.max) if st is not None and st.has_min_max else None)
-                self.files.append((seg, path, md, ranges))
+                self.files.append((seg, path, md, _ranges(md, key)))
 
     def read(self, keys: list, cols: list[str]) -> pd.DataFrame:
         want = sorted(keys)
@@ -117,13 +118,49 @@ class _LocalReader:
                 pa.schema([schema.field(c) for c in file_cols]).empty_table()
                 .append_column("seg", pa.array([], pa.int32()))
             ]
-        return pa.concat_tables(tables).select(cols).to_pandas()
+        # a delta segment's files may differ from older ones in nullability
+        return pa.concat_tables(tables, promote_options="default").select(cols).to_pandas()
+
+    def scan(self, cols: list[str], where, limit: int, prune=None) -> np.ndarray | None:
+        """Sorted keys of the rows where ``where(table of cols)`` holds — a
+        scan of ``cols`` and the key, one file at a time, so memory is one
+        file's columns plus the matched keys. ``prune=(col, sorted values)``
+        skips the row groups whose ``col`` min/max holds none of the values.
+        None as soon as more than ``limit`` rows match."""
+        keys, n = [], 0
+        for _, path, md, _ in self.files:
+            rgs = range(md.num_row_groups)
+            if prune is not None:
+                col, want = prune
+                rgs = [i for i, r in enumerate(_ranges(md, col)) if r is None or _any_in(want, *r)]
+                if not rgs:
+                    continue
+            with pq.ParquetFile(path, metadata=md) as pf:
+                t = pf.read_row_groups(rgs, columns=[self.key, *cols], use_threads=False)
+            k = t[self.key].filter(where(t)).to_numpy()
+            n += k.size
+            if n > limit:
+                return None
+            keys.append(k)
+        return np.sort(np.concatenate(keys)) if keys else np.empty(0, np.int64)
 
 
 def _any_in(want: list, lo, hi) -> bool:
     """Does the sorted list ``want`` hold a value in [lo, hi]?"""
     i = bisect.bisect_left(want, lo)
     return i < len(want) and want[i] <= hi
+
+
+def _ranges(md: pq.FileMetaData, col: str) -> list[tuple | None]:
+    """Per row group, the (min, max) of flat column ``col``; None where the
+    footer has no min/max, and everywhere when ``col`` is not a flat column
+    (an array's leaf is ``col.list.element``)."""
+    paths = [md.schema.column(j).path for j in range(md.num_columns)]
+    if col not in paths:
+        return [None] * md.num_row_groups
+    j = paths.index(col)
+    stats = (md.row_group(i).column(j).statistics for i in range(md.num_row_groups))
+    return [(st.min, st.max) if st is not None and st.has_min_max else None for st in stats]
 
 
 @dataclass
@@ -142,12 +179,12 @@ class SearchEngine:
 
     Serving fast path: when a query's candidate postings are small
     (Σ df ≤ SMALL_QUERY_POSTINGS) and its fq ids and tombstones are bounded,
-    ``mode="auto"`` reads the query's blocks (and, without a doc cache, its
-    hits' doc rows) with a driver-local parquet reader and runs the segment
-    kernel in-process — no Spark job once the engine is warm, instead of a
-    shuffle + applyInPandas stage. This is what a serving node does with a
-    Lucene segment reader; the distributed placement remains for head terms
-    and is forced with ``mode="wand"``/``"exhaustive"`` (identity-tested).
+    ``mode="auto"`` reads the query's blocks and its hits' doc rows with a
+    driver-local parquet reader and runs the segment kernel in-process — no
+    Spark job once the engine is warm, instead of a shuffle + applyInPandas
+    stage. This is what a serving node does with a Lucene segment reader;
+    the distributed placement remains for head terms and is forced with
+    ``mode="wand"``/``"exhaustive"`` (identity-tested).
     Either way ``search()`` runs the query and returns a LocalTableScan of
     the finished hits.
     """
@@ -161,10 +198,6 @@ class SearchEngine:
     # Σ cf bound for the positional (phrase) driver route — pos_bin bytes
     # scale with total occurrences, not document frequency
     SMALL_QUERY_POSITIONS = int(os.environ.get("INTUITION_SMALL_QUERY_POSITIONS", "2000000"))
-    # doc metadata (doc_id → docID/conv/turn/ts) cached driver-side below this
-    # corpus size: hydration is an in-memory merge instead of a local point
-    # lookup of the hits' doc rows
-    DOC_CACHE_MAX_DOCS = int(os.environ.get("INTUITION_DOC_CACHE_MAX_DOCS", "1000000"))
     # LRU postings-block cache (Solr filter-cache analogue): repeated query
     # terms skip the postings read entirely. Bounded by total cached
     # postings count; segments are immutable so entries only invalidate on
@@ -176,8 +209,9 @@ class SearchEngine:
     RESULT_CACHE_MAX = int(os.environ.get("INTUITION_RESULT_CACHE_MAX", "256"))
     # LRU fq cache (Solr filterCache analogue): each non-scoring metadata
     # predicate (field_eq entry; require_no_tool; ts_after; filter_docs)
-    # resolves ONCE to a sorted doc_id array, then is intersected into the
-    # kernel BEFORE the top-k cut — Solr fq semantics (filter, then rank).
+    # resolves ONCE, by a local scan of its docs column, to a sorted doc_id
+    # array, then is intersected into the kernel BEFORE the top-k cut — Solr
+    # fq semantics (filter, then rank).
     # Like Solr's per-shard bitsets the arrays are bounded: a predicate
     # matching more than FQ_MAX_IDS docs is marked oversize and its queries
     # take the distributed placement, its ids cogrouped per segment instead.
@@ -195,7 +229,6 @@ class SearchEngine:
         self,
         spark: SparkSession,
         index_dirs: dict[str, str] | str,
-        cache_dictionary: bool = True,
         as_of: int | None = None,
         as_of_ts: float | None = None,
     ):
@@ -216,9 +249,7 @@ class SearchEngine:
         self._as_of_req = (as_of, as_of_ts)
         self._as_of_pinned: dict[str, int] = {}
         self._snap: dict[str, dict | None] = {}
-        self._cache_dictionary = cache_dictionary
         self._dict_cache: dict[str, dict[str, int]] = {}
-        self._doc_cache: dict[str, pd.DataFrame] = {}
         from collections import OrderedDict
 
         self._block_cache: OrderedDict[tuple[str, str], pd.DataFrame] = OrderedDict()
@@ -278,15 +309,13 @@ class SearchEngine:
             self._snap[a] = snap
 
     def _ensure_warm(self, a: str) -> None:
-        """Build the driver-side dictionary/doc caches for one analyzer.
+        """Build the driver-side dictionary cache for one analyzer.
         Idempotent; deferred after refresh() so a sharded server refreshing
         many shards doesn't pay all warm-ups synchronously — each shard
         re-warms on its first query instead."""
         if a not in self._needs_warm:
             return
         self._needs_warm.discard(a)
-        if not self._cache_dictionary:
-            return
         dic = self._dictionary_df(a).select("term", "df", "cf")
         persisted = self._snap.get(a) is not None
         if persisted:
@@ -305,21 +334,13 @@ class SearchEngine:
             )
         if persisted:
             dic.unpersist()
-        if self.stats[a]["N"] <= self.DOC_CACHE_MAX_DOCS:
-            self._doc_cache[a] = (
-                self._docs(a)
-                .select("doc_id", "doc", "conv_id", "turn_idx", "ts", "role", "tool")
-                .toPandas()
-                .set_index("doc_id", drop=False)
-            )
 
     def refresh(self) -> None:
         """Invalidate caches after incremental merges. Cheap by design: only
-        the tiny stats JSONs reload synchronously; dictionary/doc caches and
-        reader warm-up rebuild lazily on the next query per analyzer."""
+        the tiny stats JSONs reload synchronously; the dictionary cache and
+        the readers rebuild lazily on the next query per analyzer."""
         self._load_stats()
         self._dict_cache.clear()
-        self._doc_cache.clear()
         self._block_cache.clear()
         self._block_cache_postings = 0
         self._result_cache.clear()
@@ -487,13 +508,51 @@ class SearchEngine:
         SolrServiceImpl.java:397-404). fval=None means IS NULL (the
         require_no_tool shape)."""
         if fcol == "__ts_after__":
-            return F.col("ts") >= F.lit(fval)
+            # an aware instant: PySpark reads a naive literal in the OS timezone
+            return F.col("ts") >= F.lit(self._ts_bound(fval).to_pydatetime())
         if fcol == "__doc_in__":
             return F.col("doc").isin(list(fval))
         dt = self._docs(a).schema[fcol].dataType
         if isinstance(dt, T.ArrayType):
             return F.array_contains(F.col(fcol), fval)
         return F.col(fcol).isNull() if fval is None else (F.col(fcol) == F.lit(fval))
+
+    def _fq_mask(self, t: pa.Table, fcol: str, fval) -> pa.Array:
+        """Arrow twin of `_fq_cond`: which rows of docs table ``t`` (holding
+        column ``_FQ_COLS.get(fcol, fcol)``) one fq pair keeps."""
+        col = t[_FQ_COLS.get(fcol, fcol)]
+        if fcol == "__ts_after__":
+            # an aware bound into a naive (INT96: UTC) type converts to UTC
+            return pc.greater_equal(col, pa.scalar(self._ts_bound(fval), col.type))
+        if fcol == "__doc_in__":
+            return pc.is_in(col, value_set=pa.array(list(fval), col.type))
+        if pa.types.is_list(col.type):
+            lists = col.combine_chunks()
+            hit = pc.list_parent_indices(lists).filter(pc.equal(pc.list_flatten(lists), fval))
+            mask = np.zeros(len(lists), dtype=bool)
+            mask[hit.to_numpy()] = True
+            return pa.array(mask)
+        return pc.is_null(col) if fval is None else pc.equal(col, fval)
+
+    @staticmethod
+    def _fq_prune(fcol: str, fval):
+        """The row-group pruning of one fq pair's scan (`_LocalReader.scan`):
+        its column and sorted values for a scalar ``==`` or ``filter_docs``.
+        None for IS NULL, and for ts_after: parquet INT96 ``ts`` has no
+        min/max statistics."""
+        if fcol == "__doc_in__":
+            return "doc", list(fval)
+        if fcol != "__ts_after__" and fval is not None:
+            return fcol, [fval]
+        return None
+
+    def _ts_bound(self, fval) -> pd.Timestamp:
+        """A ts_after bound as a UTC instant: a naive bound is a wall time in
+        the session timezone. Parquet ``ts`` (INT96) reads as naive UTC."""
+        bound = pd.Timestamp(fval)
+        if bound.tzinfo is None:
+            bound = bound.tz_localize(self.spark.conf.get("spark.sql.session.timeZone", "UTC"))
+        return bound.tz_convert("UTC")
 
     def _dfs_for_terms(self, a: str, terms: list[str]) -> dict[str, int]:
         cached = self._dict_cache.get(a)
@@ -570,11 +629,11 @@ class SearchEngine:
 
         Each single predicate is cached (LRU, keyed with the on-disk index
         state so incremental merges invalidate naturally); conjunctions
-        intersect the cached arrays. Resolution uses the in-memory doc cache
-        when present (zero Spark jobs), else one pushdown-filtered scan of
-        the docs store. Returns None when any predicate matches more than
-        FQ_MAX_IDS docs — the per-shard bound that keeps the driver's memory
-        O(selective predicates), exactly Solr's maxDoc-bounded filterCache
+        intersect the cached arrays. A predicate resolves by one local scan
+        of its docs column and doc_id (`_LocalReader.scan`; no Spark job),
+        which stops once it passes FQ_MAX_IDS matches: None then — the
+        per-shard bound that keeps the driver's memory O(one file +
+        selective predicates), exactly Solr's maxDoc-bounded filterCache
         bitsets; the caller must then use the distributed placement.
         """
         out: np.ndarray | None = None
@@ -582,44 +641,10 @@ class SearchEngine:
         for fcol, fval in self._fq_preds(q):
             key = (a, fcol, fval, state)
             if key not in self._fq_cache:
-                cached_docs = self._doc_cache.get(a)
-                # extra metadata columns (register_field_col) aren't in the
-                # doc cache's fixed column set — resolve those distributed
-                if cached_docs is not None and (
-                    fcol.startswith("__") or fcol in cached_docs.columns
-                ):
-                    if fcol == "__ts_after__":
-                        # toPandas yields NAIVE wall times in the SESSION
-                        # timezone (not necessarily UTC — nothing forces the
-                        # session.py factory) — align the bound's awareness
-                        # to the cached column's basis before comparing
-                        sess_tz = self.spark.conf.get(
-                            "spark.sql.session.timeZone", "UTC"
-                        )
-                        bound = pd.Timestamp(fval)
-                        if cached_docs["ts"].dt.tz is None:
-                            if bound.tzinfo is not None:
-                                bound = bound.tz_convert(sess_tz).tz_localize(None)
-                        elif bound.tzinfo is None:
-                            bound = bound.tz_localize(sess_tz)
-                        mask = cached_docs["ts"] >= bound
-                    elif fcol == "__doc_in__":
-                        mask = cached_docs["doc"].isin(fval)
-                    else:
-                        col = cached_docs[fcol]
-                        mask = col.isna() if fval is None else (col == fval)
-                    ids = cached_docs.index.to_numpy()[mask.to_numpy()]
-                    ids = None if ids.size > self.FQ_MAX_IDS else np.sort(
-                        ids.astype(np.int64)
-                    )
-                else:
-                    pdf = (
-                        self._docs(a).filter(self._fq_cond(a, fcol, fval)).select("doc_id")
-                        .limit(self.FQ_MAX_IDS + 1).toPandas()
-                    )
-                    ids = None if len(pdf) > self.FQ_MAX_IDS else np.sort(
-                        pdf["doc_id"].to_numpy().astype(np.int64)
-                    )
+                ids = self._local(a, "docs").scan(
+                    [_FQ_COLS.get(fcol, fcol)], lambda t: self._fq_mask(t, fcol, fval),
+                    self.FQ_MAX_IDS, self._fq_prune(fcol, fval),
+                )
                 self._fq_cache[key] = ids
                 # max(1, …): FQ_CACHE_MAX=0 must degrade to "cache nothing
                 # beyond the in-flight key", not evict the entry we just
@@ -952,20 +977,15 @@ class SearchEngine:
         return out
 
     def _driver_hydrate(self, cand: pd.DataFrame, q: Query, order=("score",)) -> DataFrame:
-        """Fetch doc metadata for either placement's bounded candidate set —
-        from the doc cache, else by a local point lookup — and produce the
-        canonical hit frame locally."""
-        a = self._route(q)
+        """Fetch doc metadata for either placement's bounded candidate set by
+        a local point lookup on doc_id, and produce the canonical hit frame
+        locally."""
         if cand.empty:
             return self._empty_hits()
-        cached = self._doc_cache.get(a)
-        if cached is not None:
-            docs = cached.loc[cached.index.intersection(cand["doc_id"])].reset_index(drop=True)
-        else:
-            docs = self._local(a, "docs").read(
-                [int(d) for d in cand["doc_id"].tolist()],
-                ["doc_id", "doc", "conv_id", "turn_idx", "ts"],
-            )
+        docs = self._local(self._route(q), "docs").read(
+            [int(d) for d in cand["doc_id"].tolist()],
+            ["doc_id", "doc", "conv_id", "turn_idx", *(c for c in order if c != "score")],
+        )
         m = cand.merge(docs, on="doc_id")
         m = m.sort_values(
             [*order, "conv_id", "turn_idx"],

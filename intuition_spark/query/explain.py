@@ -224,17 +224,20 @@ def _find_posting(pdf: pd.DataFrame, doc_id: int):
     return None
 
 
-def _doc_meta(engine, a: str, q: Query, doc: str):
-    """One metadata row for ``doc`` — from the driver doc cache when it
-    covers every column the fq gates need (zero Spark jobs), else one
-    pushdown point-scan."""
-    extra = [c for c in (q.field_eq or {}) if c not in ("role", "tool", "conv_id")]
-    cached = engine._doc_cache.get(a)
-    if cached is not None and not extra:
-        m = cached[cached["doc"] == doc]
-        return m.iloc[0] if len(m) else None
-    m = engine._docs(a).filter(F.col("doc") == doc).limit(1).toPandas()
-    return m.iloc[0] if not m.empty else None
+def _doc_meta(engine, a: str, doc: str):
+    """The docs row of ``doc``, or None: a local scan of the ``doc`` column
+    finds its doc_ids, the way fq resolves ``filter_docs``, then a point
+    lookup reads the row (`_LocalReader`; no Spark job). Until `compact`,
+    an upserted key has one row per merge that wrote it; the newest one (the
+    highest doc_id: a merge appends segments) is the live one."""
+    reader = engine._local(a, "docs")
+    pred = ("__doc_in__", (doc,))
+    ids = reader.scan(["doc"], lambda t: engine._fq_mask(t, *pred), engine.FQ_MAX_IDS,
+                      engine._fq_prune(*pred))
+    if ids is None or not ids.size:
+        return None
+    cols = reader.files[0][2].schema.to_arrow_schema().names
+    return reader.read([int(ids[-1])], cols).iloc[0]
 
 
 def explain_doc(engine, q: Query, doc: str) -> dict:
@@ -243,7 +246,7 @@ def explain_doc(engine, q: Query, doc: str) -> dict:
     engine._ensure_warm(a)
     if q.fields:
         engine._validate_fields(q)
-    row = _doc_meta(engine, a, q, doc)
+    row = _doc_meta(engine, a, doc)
     if row is None:
         return {"doc": doc, "found": False, "matched": False}
     doc_id = int(row["doc_id"])
@@ -395,13 +398,10 @@ def explain_doc(engine, q: Query, doc: str) -> dict:
     if q.require_no_tool:
         gates.append({"gate": "fq tool IS NULL", "pass": bool(pd.isna(row.get("tool")))})
     if q.ts_after is not None:
+        # parquet ts reads as UTC (naive for INT96), as in `_fq_mask`
         ts = pd.Timestamp(row["ts"])
-        bound = pd.Timestamp(q.ts_after)
-        if ts.tzinfo is None and bound.tzinfo is not None:
-            sess_tz = engine.spark.conf.get("spark.sql.session.timeZone", "UTC")
-            bound = bound.tz_convert(sess_tz).tz_localize(None)
-        elif ts.tzinfo is not None and bound.tzinfo is None:
-            bound = bound.tz_localize(ts.tzinfo)
+        ts = ts.tz_localize("UTC") if ts.tzinfo is None else ts
+        bound = engine._ts_bound(q.ts_after)
         gates.append({"gate": f"fq ts >= {q.ts_after}", "pass": bool(ts >= bound)})
     if q.filter_docs is not None:
         gates.append({"gate": "filter_docs", "pass": doc in q.filter_docs})

@@ -39,7 +39,6 @@ import numpy as np
 import pandas as pd
 
 from intuition_spark.index import codec
-from intuition_spark.query.ast import SLOPPY_WEIGHTED
 
 K1 = 1.2
 B = 0.75
@@ -510,17 +509,13 @@ def _phrase_seg_match(seg_pdf: pd.DataFrame, terms: list[str], slop: int) -> pd.
                          "dl": pd.array(out_dl, dtype="float64")})
 
 
-def _phrase_tf(plists: list[np.ndarray], slop: int, weighted: bool | None = None) -> float:
+def _phrase_tf(plists: list[np.ndarray], slop: int) -> float:
     """Shared sloppy-phrase semantics — see oracle/bm25_oracle.py.
 
-    ``weighted`` (default: SLOPPY_WEIGHTED, i.e. Lucene parity) weights each
-    sloppy match by 1/(1+distance) where distance is the extra spread of the
-    matched window beyond an exact phrase — Lucene SloppyPhraseScorer's
-    sloppyFreq (matchLength). Exact matches (slop=0) always weigh 1, so
-    phrase scoring is unchanged. ``weighted=False`` restores the simplified
-    every-match-counts-1 mode (round-1 behavior)."""
-    if weighted is None:
-        weighted = SLOPPY_WEIGHTED
+    Each sloppy match weighs 1/(1+distance), where distance is the extra
+    spread of the matched window beyond an exact phrase — Lucene
+    SloppyPhraseScorer's sloppyFreq (matchLength). Exact matches (slop=0)
+    weigh 1."""
     first = plists[0]
     tf = 0.0
     for p0 in first.tolist():
@@ -540,5 +535,5 @@ def _phrase_tf(plists: list[np.ndarray], slop: int, weighted: bool | None = None
                 prev = int(nxt.min())
         if ok:
             dist = (prev - p0) - (len(plists) - 1)  # 0 for an exact match
-            tf += 1.0 / (1.0 + dist) if weighted else 1.0
+            tf += 1.0 / (1.0 + dist)
     return tf

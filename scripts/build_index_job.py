@@ -33,7 +33,6 @@ def main() -> None:
     ap.add_argument("--analyzer", default="standard", choices=["standard", "standard_nostem", "ws"])
     ap.add_argument("--segments", type=int, default=16)
     ap.add_argument("--segs-per-job", type=int, default=16)
-    ap.add_argument("--no-positions", action="store_true")
     ap.add_argument("--resume", action="store_true", help="skip segments marked done in manifest")
     args = ap.parse_args()
 
@@ -45,8 +44,7 @@ def main() -> None:
     paths = build_index(
         spark, spark.read.parquet(args.input), args.output,
         analyzer=args.analyzer, n_segments=args.segments,
-        with_positions=not args.no_positions, segs_per_job=args.segs_per_job,
-        resume=args.resume,
+        segs_per_job=args.segs_per_job, resume=args.resume,
     )
     total_s = round(time.time() - t0, 2)
     with open(paths.stats) as f:

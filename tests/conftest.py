@@ -46,6 +46,30 @@ def assert_reader_matches_spark():
     return check
 
 
+@pytest.fixture
+def assert_fq_ids_match_spark(monkeypatch):
+    """Check that `_fq_ids` of a one-predicate query equals the sorted
+    doc_ids of ``_docs(a).filter(_fq_cond(...))``, and that its FQ_MAX_IDS
+    bound holds: the match count resolves to that array, one below it to
+    None (oversize)."""
+    import numpy as np
+
+    def check(eng, q):
+        a = eng._route(q)
+        ((fcol, fval),) = eng._fq_preds(q)
+        rows = eng._docs(a).filter(eng._fq_cond(a, fcol, fval)).select("doc_id").collect()
+        want = sorted(r["doc_id"] for r in rows)
+        assert 0 < len(want) < eng.stats[a]["N"], f"{q.query_id}: predicate does not filter"
+        for bound, expect in ((len(want), want), (len(want) - 1, None)):
+            monkeypatch.setattr(eng, "FQ_MAX_IDS", bound)
+            eng._fq_cache.clear()
+            got = eng._fq_ids(a, q)
+            assert (got if got is None else got.tolist()) == expect, f"{q.query_id} @ {bound}"
+            assert got is None or got.dtype == np.int64
+
+    return check
+
+
 def _capture(monkeypatch, method: str) -> list:
     """Every frame ``SearchEngine.<method>`` builds while the test runs."""
     from intuition_spark.query.engine import SearchEngine

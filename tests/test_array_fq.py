@@ -82,6 +82,11 @@ def test_array_fq_composes_with_scalar_fq(tag_engine):
     assert got and all(doc in allowed for doc, _ in got)
 
 
+def test_array_fq_ids_equal_spark_predicate(tag_engine, assert_fq_ids_match_spark):
+    eng, _ = tag_engine
+    assert_fq_ids_match_spark(eng, Query("afq_ids", "term", [["query"]], field_eq={"tags": "t1"}))
+
+
 def test_unregistered_field_still_rejected():
     with pytest.raises(ValueError, match="field_eq supports"):
         Query("bad", "term", [["x"]], field_eq={"nope": "x"})

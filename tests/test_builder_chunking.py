@@ -4,8 +4,8 @@ The r5 scaling work split the indexer's object-heavy tokenize/factorize/
 lexsort stage into cache-sized chunks (builder.INDEX_CHUNK_DOCS) merged by an
 int-only per-segment lexsort. These tests pin that the merge reproduces the
 exact whole-segment output — every column of every block, including the
-compressed varint streams — for several chunk sizes, analyzers, and the
-no-positions mode, so the on-disk index layout cannot depend on the knob.
+compressed varint streams — for several chunk sizes and analyzers, so the
+on-disk index layout cannot depend on the knob.
 """
 
 from __future__ import annotations
@@ -38,8 +38,8 @@ def _corpus(n_docs: int, seed: int) -> list[str]:
     return docs
 
 
-def _run(analyzer: str, with_positions: bool, chunk_docs: int, docs, ids):
-    fn = _make_segment_indexer(analyzer, with_positions, chunk_docs=chunk_docs)
+def _run(analyzer: str, chunk_docs: int, docs, ids):
+    fn = _make_segment_indexer(analyzer, chunk_docs=chunk_docs)
     batch = pa.record_batch(
         {
             "seg": pa.array(np.full(len(ids), 5, dtype=np.int32), type=pa.int32()),
@@ -57,23 +57,14 @@ def _run(analyzer: str, with_positions: bool, chunk_docs: int, docs, ids):
 def test_chunked_bit_identical(chunk_docs, analyzer):
     docs = _corpus(1500, seed=42)
     ids = np.arange(1500, dtype=np.int64) + (5 << 40)
-    whole = _run(analyzer, True, 10**9, docs, ids)
-    chunked = _run(analyzer, True, chunk_docs, docs, ids)
+    whole = _run(analyzer, 10**9, docs, ids)
+    chunked = _run(analyzer, chunk_docs, docs, ids)
     assert whole is not None and chunked is not None
     assert whole.schema == chunked.schema
     assert whole.num_rows == chunked.num_rows
     for name in whole.schema.names:
         a, b = whole.column(name), chunked.column(name)
         assert a.equals(b), f"column {name} differs at chunk_docs={chunk_docs}"
-
-
-def test_chunked_no_positions_identical():
-    docs = _corpus(800, seed=7)
-    ids = np.arange(800, dtype=np.int64)
-    whole = _run("standard", False, 10**9, docs, ids)
-    chunked = _run("standard", False, 100, docs, ids)
-    for name in whole.schema.names:
-        assert whole.column(name).equals(chunked.column(name)), name
 
 
 def test_chunked_unsorted_input_identical():
@@ -83,8 +74,8 @@ def test_chunked_unsorted_input_identical():
     docs = _corpus(600, seed=3)
     ids = np.arange(600, dtype=np.int64)
     perm = rng.permutation(600)
-    whole = _run("standard", True, 10**9, [docs[i] for i in perm], ids[perm])
-    chunked = _run("standard", True, 128, [docs[i] for i in perm], ids[perm])
+    whole = _run("standard", 10**9, [docs[i] for i in perm], ids[perm])
+    chunked = _run("standard", 128, [docs[i] for i in perm], ids[perm])
     for name in whole.schema.names:
         assert whole.column(name).equals(chunked.column(name)), name
 
@@ -92,4 +83,4 @@ def test_chunked_unsorted_input_identical():
 def test_all_empty_chunks_yield_none():
     docs = ["", "  ", "???"] * 10
     ids = np.arange(30, dtype=np.int64)
-    assert _run("standard", True, 4, docs, ids) is None
+    assert _run("standard", 4, docs, ids) is None

@@ -76,7 +76,7 @@ def test_tie_plateau_rank_identity(tie_setup, q, monkeypatch):
     if q.kind == "tf_sort":
         full = oracle_search(oracle, replace(q, k=10**6))
         tied = [d for d, s in full if s == exp[-1][1]]
-        ids = eng._doc_cache["standard"].set_index("doc").loc[tied, "doc_id"]
+        ids = [r["doc_id"] for r in eng.get_by_id(tied).select("doc_id").collect()]
         segs = {int(i) >> SEG_SHIFT for i in ids}
         assert len(tied) > sum(s == exp[-1][1] for _, s in exp) and len(segs) > 1
     for mode in ("auto", "wand", "exhaustive"):

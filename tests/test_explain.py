@@ -10,11 +10,13 @@ via engine instrumentation, so routing claims can't go stale."""
 import os
 from dataclasses import replace
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
 from intuition_spark.corpus import generate_transcripts
-from intuition_spark.index.builder import build_index
+from intuition_spark.index.builder import SEG_SHIFT, IndexPaths, build_index
+from intuition_spark.index.incremental import merge_delta
 from intuition_spark.query.ast import Query
 from intuition_spark.query.engine import SearchEngine
 
@@ -280,3 +282,30 @@ def test_explain_fq_section_respects_filter_docs_routing(ex_setup):
     assert exp["fq"]["resolved_n_ids"] == n_assistant
     assert exp["fields"][0]["admission"]["driver_eligible"] is True
     assert exp["path"] in ("driver", "empty")
+
+
+def test_explain_doc_after_upsert_finds_live_row(spark, tmp_root):
+    """Until compaction an upserted key has two docs rows with the same
+    ``doc``: the tombstoned old one and the live one in the merge's new
+    segment. explain_doc explains the live row, which search() returns."""
+    tbl = generate_transcripts(300, max_tokens=30).to_pandas()
+    updated = tbl.iloc[:5].copy()
+    updated["text"] = "upsertmarker " + updated["text"]
+    base_src = os.path.join(tmp_root, "xp_up_base.parquet")
+    delta_src = os.path.join(tmp_root, "xp_up_delta.parquet")
+    pq.write_table(pa.Table.from_pandas(tbl, preserve_index=False), base_src)
+    pq.write_table(pa.Table.from_pandas(updated, preserve_index=False), delta_src)
+    ix = os.path.join(tmp_root, "ix_xp_up")
+    build_index(spark, spark.read.parquet(base_src), ix, analyzer="standard", n_segments=2)
+    res = merge_delta(spark, IndexPaths(ix), spark.read.parquet(delta_src))
+    assert res["n_tombstoned"] == 5
+    eng = SearchEngine(spark, {"standard": ix})
+    q = Query("xp_up", "term", [["upsertmarker"]], k=10)
+    hits = eng.search(q).collect()
+    assert len(hits) == 5
+    for r in hits:
+        exp = eng.explain_doc(q, r["doc"])
+        assert exp["found"] and exp["matched"], exp
+        assert exp["doc_id"] >> SEG_SHIFT in res["new_segs"]
+        assert not eng._is_tombstoned("standard", exp["doc_id"])
+        assert exp["score"] == pytest.approx(r["score"], abs=1e-9)

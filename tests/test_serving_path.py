@@ -147,7 +147,8 @@ def _job_ids(spark, fn) -> list[int]:
 def test_warm_driver_query_launches_no_spark_job(spark, engine, q):
     """Once the engine is warm, a driver-admitted query's search + collect
     runs in-process: postings from the driver-local reader (block cache
-    cold here), hydration from the doc cache, a LocalTableScan result."""
+    cold here), hydration by the local docs reader, a LocalTableScan
+    result."""
     for a in engine.paths:
         engine._ensure_warm(a)
     engine._block_cache.clear()
@@ -193,13 +194,11 @@ def test_empty_result_launches_no_spark_job(spark, engine, q):
     assert "LocalTableScan" in _plan(got["df"])
 
 
-def test_driver_query_without_doc_cache_launches_no_spark_job(spark, engine, monkeypatch):
-    """Past DOC_CACHE_MAX_DOCS hydration is a local point lookup of the
-    hits' doc rows (docs/seg=N, row groups pruned on doc_id), not a job."""
-    monkeypatch.setattr(SearchEngine, "DOC_CACHE_MAX_DOCS", 0)
+def test_driver_query_hydrates_locally_without_spark_job(spark, engine):
+    """Hydration is a local point lookup of the hits' doc rows
+    (docs/seg=N, row groups pruned on doc_id), not a job."""
     ix = engine.paths["standard"].root
     eng = SearchEngine(spark, {"standard": ix})  # warms in the constructor
-    assert "standard" not in eng._doc_cache
     q = Query("zj_nodoc", "and", [["braf"], ["v600e"]], k=10)
     want = [(r["doc"], r["score"]) for r in engine.search(q).collect()]
     rows: list = []
@@ -207,3 +206,21 @@ def test_driver_query_without_doc_cache_launches_no_spark_job(spark, engine, mon
     assert eng.last_path == "driver"
     assert want and [(r["doc"], r["score"]) for r in rows] == want
     assert jobs == []
+
+
+def test_driver_fq_query_after_refresh_builds_no_spark_docs_frame(spark, engine, monkeypatch):
+    """After refresh(), a driver-admitted role-filtered query re-warms,
+    resolves its fq and hydrates through the local docs reader only: it
+    never builds the Spark docs frame."""
+    eng = SearchEngine(spark, {"standard": engine.paths["standard"].root})
+    q = Query("zj_fq_refresh", "term", [["braf"]], k=10, field_eq={"role": "user"})
+    want = [(r["doc"], r["score"]) for r in engine.search(q).collect()]
+    eng.refresh()
+
+    def no_docs(self, a):
+        raise AssertionError("SearchEngine._docs called on the driver path")
+
+    monkeypatch.setattr(SearchEngine, "_docs", no_docs)
+    got = [(r["doc"], r["score"]) for r in eng.search(q).collect()]
+    assert eng.last_path == "driver"
+    assert want and got == want
