@@ -132,17 +132,6 @@ def make_analyze_udf(analyzer: str = "standard"):
     return _analyze
 
 
-def make_terms_udf(analyzer: str = "standard"):
-    """pandas UDF: text column → array<string> of terms only (cheaper when
-    positions aren't needed, e.g. df/tf-only builds)."""
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _terms(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: [term for term, _ in analyze_text(t, analyzer)])
-
-    return _terms
-
-
 def doc_postings(tokens: list[tuple[str, int]]) -> list[tuple[str, int, list[int]]]:
     """Collapse a token stream into per-document postings (term, tf, positions)."""
     agg: dict[str, list[int]] = {}

@@ -240,10 +240,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Sign-LSH bucket expressions (hyperplane LSH, Charikar '02) — shared by the
 # bucketed near-dup verify (dedup_embed_cosine) and ANN (sim_ann_lsh).
 # ---------------------------------------------------------------------------
-def _d_plane_literal(p) -> str:
-    return PT.d_plane_literal(p)
-
-
 def _d_bucket_expr(vec: str, planes=None) -> str:
     # sign decisions quantize at 9dp on both sides (portable.d_signlsh_bits)
     return PT.d_signlsh_bits(vec, ANN_PLANES if planes is None else planes)
@@ -728,7 +724,7 @@ def fts_q17_prox_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Multimodal: payloads derived from documents.text bytes so the DuckDB oracle
-# replicates the stub decode end-to-end (functions/multimodal.py:51-61 is pure
+# replicates the stub decode end-to-end (multimodal._decode_image_stub is pure
 # byte arithmetic: tile payload to width*height, column-sum-pool / 256). Every
 # value is integer or dyadic-rational → bit-identical doubles, no rounding.
 # ---------------------------------------------------------------------------

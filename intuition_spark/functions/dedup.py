@@ -48,11 +48,12 @@ def _fnv1a_batch(strings: list[str]) -> np.ndarray:
     seps = np.flatnonzero(all_bytes == 0)
     if seps.size != n - 1:
         out = np.empty(n, dtype=np.uint64)
-        for i, s in enumerate(strings):
-            h = _FNV_OFFSET
-            for c in s.encode():
-                h = (h ^ np.uint64(c)) * _FNV_PRIME
-            out[i] = h
+        with np.errstate(over="ignore"):  # FNV-1a is defined mod 2^64
+            for i, s in enumerate(strings):
+                h = _FNV_OFFSET
+                for c in s.encode():
+                    h = (h ^ np.uint64(c)) * _FNV_PRIME
+                out[i] = h
         return out & MERSENNE
     starts = np.concatenate(([0], seps + 1))
     ends = np.concatenate((seps, [all_bytes.size]))

@@ -1,13 +1,10 @@
 """Multimodal column plumbing: image/audio/video as opaque binary + metadata.
 
 The Spark-side machinery (schemas, batch shapes, partition sizing, UDF
-signatures) is real and tested. Decoding has two modes (`_decode_image`):
-the default deterministic stub (gate/oracle mode — pixels derived from the
-byte stream by integer arithmetic) and, with INTUITION_MM_DECODE=real, a
-REAL image path: PIL when installed, else the built-in pure-stdlib PNG
-decoder (`_decode_png`: zlib inflate + filter reversal). Audio/video decode
-remains stubbed (no codecs in the sandbox); every plan shape is identical
-across modes.
+signatures) is real and tested. Decoding is a deterministic stub
+(`_decode_image_stub`): pixels are derived from the byte stream by integer
+arithmetic, so the gate oracle reproduces every feature value exactly.
+Audio and video frames are slices of the payload.
 
 Design notes for 100 TB of media:
 * binary payloads ride in their own column; `spark.sql.files.maxPartitionBytes`
@@ -53,122 +50,15 @@ FEATURE_SCHEMA = T.StructType(
 def _decode_image_stub(payload: bytes, width: int, height: int) -> np.ndarray:
     """STUB decoder: deterministic fake pixels from the byte stream.
 
-    The default (gate/test) mode — the oracle can replicate it with integer
-    arithmetic. Set INTUITION_MM_DECODE=real to route PNG payloads through a
-    real decoder instead (_decode_image below). Raising NotImplementedError
-    here would poison plan tests, so the fake is deterministic instead:
-    tests can assert exact feature values.
+    Pixels are the payload bytes tiled to width x height, so the DuckDB
+    gate oracle can replicate them with integer arithmetic and tests can
+    assert exact feature values. No codec is parsed: the same bytes give
+    the same pixels whatever their MIME type.
     """
     raw = np.frombuffer(payload, dtype=np.uint8)
     n = max(1, width * height)
     reps = int(np.ceil(n / max(1, raw.size)))
     return np.tile(raw, reps)[:n].reshape(max(1, height), max(1, width))
-
-
-PNG_SIG = b"\x89PNG\r\n\x1a\n"
-DECODE_ENV = "INTUITION_MM_DECODE"  # "stub" (default) | "real"
-
-
-def _decode_png(payload: bytes) -> np.ndarray:
-    """REAL PNG decode with only stdlib + numpy (the sandbox ships no image
-    libraries): parses the chunk stream (PNG spec, RFC 2083), inflates the
-    IDAT zlib stream, reverses per-row filters 0-4 (None/Sub/Up/Average/
-    Paeth). Supports 8-bit depth, grayscale/RGB/RGBA, non-interlaced.
-    Returns a 2-D uint8 grayscale array (RGB(A) channel-averaged)."""
-    import struct
-    import zlib
-
-    if payload[:8] != PNG_SIG:
-        raise ValueError("not a PNG payload")
-    pos, ihdr, idat = 8, None, b""
-    while pos + 8 <= len(payload):
-        (length,) = struct.unpack(">I", payload[pos : pos + 4])
-        typ = payload[pos + 4 : pos + 8]
-        data = payload[pos + 8 : pos + 8 + length]
-        if typ == b"IHDR":
-            ihdr = struct.unpack(">IIBBBBB", data)
-        elif typ == b"IDAT":
-            idat += data
-        elif typ == b"IEND":
-            break
-        pos += 12 + length  # length + type + data + crc
-    if ihdr is None:
-        raise ValueError("PNG missing IHDR")
-    w, h, depth, ctype, _comp, _filt, interlace = ihdr
-    if depth != 8 or interlace != 0 or ctype not in (0, 2, 6):
-        raise ValueError(f"unsupported PNG variant (depth={depth}, type={ctype})")
-    ch = {0: 1, 2: 3, 6: 4}[ctype]
-    raw = zlib.decompress(idat)
-    stride = w * ch
-    if len(raw) != h * (stride + 1):
-        raise ValueError("PNG scanline stream length mismatch")
-    img = np.zeros((h, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.int32)
-    for y in range(h):
-        f = raw[y * (stride + 1)]
-        line = np.frombuffer(
-            raw, dtype=np.uint8, count=stride, offset=y * (stride + 1) + 1
-        ).astype(np.int32)
-        if f == 0:  # None
-            cur = line % 256
-        elif f == 2:  # Up
-            cur = (line + prev) % 256
-        elif f in (1, 3, 4):  # Sub / Average / Paeth: sequential in x
-            cur = np.zeros(stride, dtype=np.int32)
-            for x in range(stride):
-                a = int(cur[x - ch]) if x >= ch else 0
-                b = int(prev[x])
-                if f == 1:
-                    pred = a
-                elif f == 3:
-                    pred = (a + b) // 2
-                else:
-                    c = int(prev[x - ch]) if x >= ch else 0
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                cur[x] = (line[x] + pred) % 256
-        else:
-            raise ValueError(f"bad PNG filter type {f}")
-        img[y] = cur.astype(np.uint8)
-        prev = cur
-    px = img.reshape(h, w, ch)
-    if ch == 1:
-        return px[:, :, 0].copy()
-    return (px[:, :, :3].astype(np.uint32).sum(axis=2) // 3).astype(np.uint8)
-
-
-def _decode_mode() -> str:
-    """Resolved DRIVER-side at plan-build time and captured in the UDF
-    closure — executor python workers do not share the driver's env."""
-    import os as _os
-
-    return _os.environ.get(DECODE_ENV, "stub")
-
-
-JPEG_SIG = b"\xff\xd8"
-
-
-def _decode_image(payload: bytes, width: int, height: int, mode: str = "stub") -> np.ndarray:
-    """Decoder dispatch: mode="real" routes PNG and JPEG payloads through
-    PIL when importable, else the built-in pure-stdlib readers (_decode_png
-    here; baseline-JPEG luma in functions/jpeg.py); everything else (and the
-    default mode) uses the deterministic stub, so the gate and its oracle
-    are unchanged unless INTUITION_MM_DECODE=real is set."""
-    if mode == "real" and (payload[:8] == PNG_SIG or payload[:2] == JPEG_SIG):
-        try:
-            import io
-
-            from PIL import Image  # type: ignore[import-not-found]
-
-            return np.asarray(Image.open(io.BytesIO(payload)).convert("L"), dtype=np.uint8)
-        except ImportError:
-            if payload[:8] == PNG_SIG:
-                return _decode_png(payload)
-            from intuition_spark.functions.jpeg import decode_jpeg_luma
-
-            return decode_jpeg_luma(payload)
-    return _decode_image_stub(payload, width, height)
 
 
 def extract_features(media: DataFrame, feat_dim: int = 16) -> DataFrame:
@@ -178,13 +68,11 @@ def extract_features(media: DataFrame, feat_dim: int = 16) -> DataFrame:
     rational exactly representable in float32 (colsum < 2^12, divided by a
     power of two), so downstream sums/rounds are bit-deterministic and the
     DuckDB gate oracle can reproduce them with integer arithmetic."""
-    mode = _decode_mode()
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats, nbytes = [], []
             for row in pdf.itertuples(index=False):
-                img = _decode_image(row.payload or b"", row.width or 4, row.height or 4, mode)
+                img = _decode_image_stub(row.payload or b"", row.width or 4, row.height or 4)
                 pooled = np.resize(img.astype(np.float64).sum(axis=0), feat_dim) / 256.0
                 feats.append([float(x) for x in pooled])
                 nbytes.append(len(row.payload or b""))
@@ -203,13 +91,11 @@ def extract_features(media: DataFrame, feat_dim: int = 16) -> DataFrame:
 def resize_images(media: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFrame:
     """Resize (nearest-neighbor over the decoded pixels) → new payload column.
     Plan shape: mapInPandas, payload in/payload out, metadata updated."""
-    mode = _decode_mode()
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             payloads = []
             for row in pdf.itertuples(index=False):
-                img = _decode_image(row.payload or b"", row.width or 4, row.height or 4, mode)
+                img = _decode_image_stub(row.payload or b"", row.width or 4, row.height or 4)
                 ys = np.linspace(0, img.shape[0] - 1, out_h).astype(int)
                 xs = np.linspace(0, img.shape[1] - 1, out_w).astype(int)
                 payloads.append(img[np.ix_(ys, xs)].astype(np.uint8).tobytes())

@@ -60,7 +60,7 @@ def d_charfold(expr: str) -> str:
     )
 
 
-# -- tokens / shingles --------------------------------------------------------
+# -- tokens -------------------------------------------------------------------
 
 def s_tokens(text_col: Column) -> Column:
     """Whitespace tokens (gate text is single-space separated)."""
@@ -68,27 +68,6 @@ def s_tokens(text_col: Column) -> Column:
 
 
 D_TOKENS = "list_filter(string_split(lower({t}), ' '), t -> t <> '')"
-
-
-def s_shingles(toks: Column, n: int = 3) -> Column:
-    size = F.size(toks)
-    return F.when(
-        size >= n,
-        F.transform(
-            F.sequence(F.lit(0), size - n),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", toks)))
-
-
-def d_shingles(toks_expr: str, n: int = 3) -> str:
-    parts = ", ".join(f"{toks_expr}[i+{j + 1}]" for j in range(n))  # duckdb lists are 1-indexed
-    return (
-        f"CASE WHEN len({toks_expr}) >= {n} THEN "
-        f"list_transform(range(0, len({toks_expr}) - {n} + 1), "
-        f"i -> concat_ws(' ', {parts})) "
-        f"ELSE [array_to_string({toks_expr}, ' ')] END"
-    )
 
 
 # -- minhash signature over distinct shingle hashes ---------------------------

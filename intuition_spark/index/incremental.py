@@ -25,6 +25,7 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -147,12 +148,18 @@ def merge_delta(
 
 def compaction_pressure(spark: SparkSession, paths: IndexPaths) -> dict:
     """Operational gauges for the auto-compaction policy: the tombstone
-    count/ratio and segment count of the live index. Cheap — tombstone and
-    doc counts come from parquet footer metadata, no data scan."""
+    count/ratio and segment count of the live index. Cheap — the tombstone
+    count sums the row counts in the parquet footers of the files Spark's
+    reader lists, and the doc count comes from stats.json: no Spark job, no
+    data scan."""
     with open(paths.stats) as f:
         stats = json.load(f)
-    tomb = read_tombstones(spark, paths)
-    n_tomb = int(tomb.count()) if tomb is not None else 0
+    p = tombstones_path(paths)
+    n_tomb = sum(
+        pq.read_metadata(os.path.join(p, f)).num_rows
+        for f in (os.listdir(p) if os.path.exists(p) else [])
+        if not f.startswith(("_", "."))
+    )
     n_docs = int(stats.get("N", 0))
     return {
         "n_tombstones": n_tomb,

@@ -151,6 +151,21 @@ def _any_in(want: list, lo, hi) -> bool:
     return i < len(want) and want[i] <= hi
 
 
+def _fq_value(docs: _LocalReader, fcol: str, fval):
+    """A field_eq value cast to its docs column's Arrow type (a list
+    column's element type), as Spark's ``==`` casts in `_fq_cond`: ``"2021"``
+    on an int64 column is 2021. ValueError when the value does not cast."""
+    if fcol in _FQ_COLS or fval is None or not docs.files:
+        return fval
+    typ = docs.files[0][2].schema.to_arrow_schema().field(fcol).type
+    if pa.types.is_list(typ):
+        typ = typ.value_type
+    try:
+        return pa.scalar(fval).cast(typ).as_py()
+    except (pa.ArrowInvalid, pa.ArrowNotImplementedError) as e:
+        raise ValueError(f"field_eq {fcol}={fval!r} does not cast to {typ}") from e
+
+
 def _ranges(md: pq.FileMetaData, col: str) -> list[tuple | None]:
     """Per row group, the (min, max) of flat column ``col``; None where the
     footer has no min/max, and everywhere when ``col`` is not a flat column
@@ -641,9 +656,11 @@ class SearchEngine:
         for fcol, fval in self._fq_preds(q):
             key = (a, fcol, fval, state)
             if key not in self._fq_cache:
-                ids = self._local(a, "docs").scan(
-                    [_FQ_COLS.get(fcol, fcol)], lambda t: self._fq_mask(t, fcol, fval),
-                    self.FQ_MAX_IDS, self._fq_prune(fcol, fval),
+                docs = self._local(a, "docs")
+                v = _fq_value(docs, fcol, fval)
+                ids = docs.scan(
+                    [_FQ_COLS.get(fcol, fcol)], lambda t: self._fq_mask(t, fcol, v),
+                    self.FQ_MAX_IDS, self._fq_prune(fcol, v),
                 )
                 self._fq_cache[key] = ids
                 # max(1, …): FQ_CACHE_MAX=0 must degrade to "cache nothing

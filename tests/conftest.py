@@ -1,5 +1,7 @@
+import contextlib
 import os
 import shutil
+import signal
 import sys
 
 import pytest
@@ -7,6 +9,55 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from intuition_spark.session import get_spark  # noqa: E402
+
+
+@contextlib.contextmanager
+def deadline(seconds: float):
+    """Raise TimeoutError in the main thread once ``seconds`` have passed
+    (a SIGALRM interval timer), then disarm it on exit."""
+
+    def expire(signum, frame):
+        raise TimeoutError(f"deadline of {seconds}s passed")
+
+    prev = signal.signal(signal.SIGALRM, expire)
+    signal.setitimer(signal.ITIMER_REAL, seconds)
+    try:
+        yield
+    finally:
+        signal.setitimer(signal.ITIMER_REAL, 0)
+        signal.signal(signal.SIGALRM, prev)
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "timeout(seconds): fail the test with TimeoutError after this many seconds"
+    )
+
+
+@pytest.hookimpl(hookwrapper=True)
+def pytest_runtest_call(item):
+    """Enforce ``@pytest.mark.timeout(seconds)`` with `deadline`, without
+    the pytest-timeout plugin."""
+    mark = item.get_closest_marker("timeout")
+    if mark is None:
+        yield
+        return
+    with deadline(mark.args[0]):
+        yield
+
+
+def job_ids(spark, fn) -> list[int]:
+    """Spark job ids launched while ``fn`` runs (its own job group)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"zero_job_guard_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

@@ -87,6 +87,49 @@ def test_array_fq_ids_equal_spark_predicate(tag_engine, assert_fq_ids_match_spar
     assert_fq_ids_match_spark(eng, Query("afq_ids", "term", [["query"]], field_eq={"tags": "t1"}))
 
 
+@pytest.fixture(scope="module")
+def year_engine(spark, tmp_root):
+    register_field_col("year")
+    tbl = generate_transcripts(2000, max_tokens=30).to_pandas()
+    tbl["year"] = (2020 + tbl["turn_idx"] % 3).astype("int64")
+    src = os.path.join(tmp_root, "year.parquet")
+    pq.write_table(pa.Table.from_pandas(tbl, preserve_index=False), src)
+    ix = os.path.join(tmp_root, "ix_year")
+    build_index(
+        spark, spark.read.parquet(src), ix, analyzer="standard", n_segments=2,
+        extra_meta_cols=["year"],
+    )
+    return SearchEngine(spark, {"standard": ix}), tbl
+
+
+@pytest.mark.parametrize("mode", ["auto", "wand"])
+def test_int_column_fq_casts_the_value(year_engine, mode):
+    """field_eq on an int64 extra column: the parser's string "2021" and an
+    int 2021 both filter to the year-2021 docs (the value is cast to the
+    column's type, as Spark's `==` casts)."""
+    eng, pdf = year_engine
+    in_2021 = {f"{c}:{t}" for c, t, y in zip(pdf["conv_id"], pdf["turn_idx"], pdf["year"])
+               if y == 2021}
+    base = Query("yfq", "term", [["query"]], k=10_000)
+    expected = [r for r in _rows(eng.search(base, mode=mode)) if r[0] in in_2021]
+    for i, year in enumerate(("2021", 2021)):
+        got = _rows(eng.search(replace(base, query_id=f"yfq{i}", field_eq={"year": year}),
+                               mode=mode))
+        assert got == expected, year
+    assert expected
+
+
+def test_int_column_fq_ids_equal_spark_predicate(year_engine, assert_fq_ids_match_spark):
+    eng, _ = year_engine
+    assert_fq_ids_match_spark(eng, Query("yfq_ids", "term", [["query"]], field_eq={"year": "2021"}))
+
+
+def test_uncastable_fq_value_raises(year_engine):
+    eng, _ = year_engine
+    with pytest.raises(ValueError, match="year.*'abc'"):
+        eng.search(Query("yfq_bad", "term", [["query"]], field_eq={"year": "abc"}))
+
+
 def test_unregistered_field_still_rejected():
     with pytest.raises(ValueError, match="field_eq supports"):
         Query("bad", "term", [["x"]], field_eq={"nope": "x"})

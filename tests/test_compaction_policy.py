@@ -10,6 +10,7 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from conftest import job_ids
 
 from intuition_spark.corpus import generate_transcripts
 from intuition_spark.index.builder import IndexPaths, build_index
@@ -17,6 +18,7 @@ from intuition_spark.index.incremental import (
     compaction_pressure,
     maybe_compact,
     merge_delta,
+    read_tombstones,
 )
 from intuition_spark.query.ast import Query
 from intuition_spark.query.engine import SearchEngine
@@ -48,6 +50,25 @@ QUERIES = [
 
 def _rows(df):
     return [(r["doc"], round(r["score"], 9)) for r in df.collect()]
+
+
+def test_pressure_counts_tombstones_from_footers(spark, tmp_root):
+    """After two upsert merges the tombstone count equals a Spark count of
+    the tombstones table, and reading it launches no Spark job."""
+    tbl = generate_transcripts(300, max_tokens=30).to_pandas()
+    src = os.path.join(tmp_root, "cpol_foot.parquet")
+    pq.write_table(pa.Table.from_pandas(tbl, preserve_index=False), src)
+    paths = IndexPaths(os.path.join(tmp_root, "ix_cpol_foot"))
+    build_index(spark, spark.read.parquet(src), paths.root, analyzer="standard", n_segments=2)
+    for i, n in enumerate((40, 25)):
+        upd = tbl.iloc[:n].copy()
+        upd["text"] = f"footer count rewrite {i} " + upd["turn_idx"].astype(str)
+        dsrc = os.path.join(tmp_root, f"cpol_foot_d{i}.parquet")
+        pq.write_table(pa.Table.from_pandas(upd, preserve_index=False), dsrc)
+        merge_delta(spark, paths, spark.read.parquet(dsrc))
+    out: list = []
+    assert job_ids(spark, lambda: out.append(compaction_pressure(spark, paths))) == []
+    assert out[0]["n_tombstones"] == read_tombstones(spark, paths).count() > 0
 
 
 def test_below_ratio_no_compact(spark, ix):

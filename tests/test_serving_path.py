@@ -10,6 +10,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from conftest import job_ids
 
 from intuition_spark.corpus import generate_transcripts
 from intuition_spark.index.builder import build_index
@@ -121,20 +122,6 @@ def test_refresh_is_lazy_and_cheap(engine, oracle):
     assert all(abs(g - e) < 1e-6 for (_, g), (_, e) in zip(got, exp))
 
 
-def _job_ids(spark, fn) -> list[int]:
-    """Spark job ids launched while ``fn`` runs (its own job group)."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"zero_job_guard_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize(
     "q",
     [
@@ -154,7 +141,7 @@ def test_warm_driver_query_launches_no_spark_job(spark, engine, q):
     engine._block_cache.clear()
     engine._block_cache_postings = 0
     rows: list = []
-    jobs = _job_ids(spark, lambda: rows.extend(engine.search(q).collect()))
+    jobs = job_ids(spark, lambda: rows.extend(engine.search(q).collect()))
     assert engine.last_path == "driver"
     assert rows, f"{q.query_id}: vacuous (no hits)"
     assert jobs == []
@@ -166,7 +153,7 @@ def test_cached_distributed_result_launches_no_spark_job(spark, engine):
     q = Query("zj_wand", "and", [["braf"], ["v600e"]], k=10)
     want = engine.search(q, mode="wand").collect()
     rows: list = []
-    jobs = _job_ids(spark, lambda: rows.extend(engine.search(q, mode="wand").collect()))
+    jobs = job_ids(spark, lambda: rows.extend(engine.search(q, mode="wand").collect()))
     assert engine.last_path == "result_cache"
     assert want and rows == want and jobs == []
 
@@ -188,7 +175,7 @@ def test_empty_result_launches_no_spark_job(spark, engine, q):
         got["df"] = engine.search(q)
         got["rows"] = got["df"].collect()
 
-    jobs = _job_ids(spark, run)
+    jobs = job_ids(spark, run)
     assert engine.last_path in ("driver", "empty")
     assert got["rows"] == [] and jobs == []
     assert "LocalTableScan" in _plan(got["df"])
@@ -202,7 +189,7 @@ def test_driver_query_hydrates_locally_without_spark_job(spark, engine):
     q = Query("zj_nodoc", "and", [["braf"], ["v600e"]], k=10)
     want = [(r["doc"], r["score"]) for r in engine.search(q).collect()]
     rows: list = []
-    jobs = _job_ids(spark, lambda: rows.extend(eng.search(q).collect()))
+    jobs = job_ids(spark, lambda: rows.extend(eng.search(q).collect()))
     assert eng.last_path == "driver"
     assert want and [(r["doc"], r["score"]) for r in rows] == want
     assert jobs == []

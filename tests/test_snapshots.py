@@ -148,8 +148,8 @@ def test_ts_resolution_and_refresh_pin(spark, setup):
 
 
 def test_snapshot_isolation_under_concurrent_writer(spark, tmp_root):
-    """The serving property behind `serve_shards.py --as-of`: a reader pinned
-    to a snapshot returns IDENTICAL results before a writer's merge_delta,
+    """Snapshot isolation for serving: a reader pinned to a snapshot
+    returns IDENTICAL results before a writer's merge_delta,
     after it (mtime-keyed caches invalidate and recompute under the snapshot
     filters), and after an explicit refresh() (the pin survives re-resolution).
     Snapshot isolation without any reader/writer coordination."""
